@@ -9,11 +9,12 @@ The north rule's launch shape: package the engine and submit —
         scripts/submit_encode.py \\
         --input  s3a://bucket/sequences/ \\
         --output s3a://bucket/encoded/ \\
-        --buckets 256 --chunk-size 16384 [--verify checksum] [--resume]
+        --buckets 256 --chunk-size 16384 [--verify checksum]
 
-Re-running the same command after a failure resumes past completed
-buckets (plans/pipeline.py manifests; --resume is implied, the flag just
-documents intent). Works identically on local paths.
+The encode job commits groups of input files (plans/pipeline.py
+`run_encode_job_files`). Re-running the same command after a failure
+resumes past completed buckets (resume is always on). Works identically
+on local paths.
 
 A growing corpus appends with `--append` (only new files are planned);
 the same entrypoint runs the maintenance jobs against the output dir:
@@ -48,27 +49,6 @@ def main() -> None:
                     help="overlap N commit groups from driver threads "
                          "(disjoint-partition writes; hides fixed "
                          "per-commit costs)")
-    ap.add_argument("--scope", choices=["files", "hash"], default="files",
-                    help="resume-unit keying. 'files' (default): commit "
-                         "groups of input files — each group reads only "
-                         "its own files, measured 1.14x plain encode at "
-                         "the 8M-row rehearsal. 'hash': data-derived "
-                         "buckets pmod(xxhash64(source,doc_id,chunk), n) "
-                         "— needed only when downstream layout must key "
-                         "on content; costs per-group re-scans (2.35x) "
-                         "or staging (see --stage-input)")
-    ap.add_argument("--cache-input", action="store_true",
-                    help="[hash scope] persist the chunked work list "
-                         "(DISK_ONLY) instead of re-scanning the source "
-                         "per commit group; pays off for expensive "
-                         "sources (JSON/object stores), measured 2x "
-                         "SLOWER for local columnar inputs")
-    ap.add_argument("--stage-input", action="store_true",
-                    help="[hash scope] materialize the chunked work "
-                         "list once under output/staging (resumable); "
-                         "wins only for expensive-to-rederive sources — "
-                         "the materialization alone costs ~6x the "
-                         "encode at the 8M rehearsal")
     ap.add_argument("--verify",
                     choices=["none", "chunks", "checksum", "hash", "exact"],
                     default="chunks",
@@ -77,10 +57,8 @@ def main() -> None:
     ap.add_argument("--statistics", choices=["none", "chunk", "page"],
                     default="page",
                     help="parquet statistics granularity (reference E5 enum)")
-    ap.add_argument("--resume", action="store_true",
-                    help="documentational; resume is always on")
     ap.add_argument("--append", action="store_true",
-                    help="[files scope] extend the catalog with newly-"
+                    help="extend the catalog with newly-"
                          "arrived input files only (committed files "
                          "keep their buckets); without it, new files "
                          "refuse loudly")
@@ -107,10 +85,10 @@ def main() -> None:
     ap.add_argument("--target-group-bytes", type=int, default=1 << 30,
                     help="[compact] merged commit-group output size")
     ap.add_argument("--catalog-checkpoint-after", type=int, default=32,
-                    help="auto-fold the catalog once more than this "
-                         "many loose version files accrete (0 disables "
-                         "via a negative sentinel; see "
-                         "checkpoint_catalog)")
+                    help="fold the catalog's loose version files into "
+                         "one checkpoint when an encode run finds more "
+                         "than this many; 0 folds on every run that "
+                         "finds at least one (see checkpoint_catalog)")
     ap.add_argument("--lock-lease-sec", type=float, default=60.0,
                     help="single-writer job-lock lease; a crashed "
                          "writer's lock is breakable after this")
@@ -143,28 +121,18 @@ def main() -> None:
                 spark, args.output, lock_lease_sec=args.lock_lease_sec)
         print(json.dumps(summary))
         return
-    src = spark.read.parquet(args.input)
-    if args.scope == "files":
-        summary = pl.run_encode_job_files(
-            spark, args.input, args.output, n_buckets=args.buckets,
-            chunk_size=args.chunk_size,
-            buckets_per_commit=args.buckets_per_commit,
-            statistics=args.statistics,
-            concurrent_commits=args.concurrent_commits,
-            append=args.append,
-            gc_min_age_sec=args.gc_min_age_sec,
-            catalog_checkpoint_after=args.catalog_checkpoint_after,
-            lock_lease_sec=args.lock_lease_sec)
-    else:
-        summary = pl.run_encode_job(
-            spark, src, args.output, n_buckets=args.buckets,
-            chunk_size=args.chunk_size,
-            buckets_per_commit=args.buckets_per_commit,
-            statistics=args.statistics,
-            concurrent_commits=args.concurrent_commits,
-            cache_input=args.cache_input,
-            stage_input=args.stage_input)
+    summary = pl.run_encode_job_files(
+        spark, args.input, args.output, n_buckets=args.buckets,
+        chunk_size=args.chunk_size,
+        buckets_per_commit=args.buckets_per_commit,
+        statistics=args.statistics,
+        concurrent_commits=args.concurrent_commits,
+        append=args.append,
+        gc_min_age_sec=args.gc_min_age_sec,
+        catalog_checkpoint_after=args.catalog_checkpoint_after,
+        lock_lease_sec=args.lock_lease_sec)
     if args.verify != "none":
+        src = spark.read.parquet(args.input)
         if args.verify == "chunks":
             row = dec.verify_encoded(src, pl.read_encoded(spark, args.output),
                                      chunk_size=args.chunk_size).first()

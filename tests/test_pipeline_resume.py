@@ -1,4 +1,4 @@
-"""Resumable pipeline: kill-and-resume against per-bucket lineage manifests."""
+"""Resumable pipeline: kill-and-resume against per-group lineage manifests."""
 
 import json
 import os
@@ -18,135 +18,6 @@ def seq(spark):
     df = sequences_df(spark, N_ROWS, seed=7, partitions=4).cache()
     df.count()
     return df
-
-
-def test_full_run_and_verify(spark, seq, tmp_path):
-    out = str(tmp_path / "run1")
-    summary = pl.run_encode_job(spark, seq, out, n_buckets=4, chunk_size=512)
-    assert summary["processed_buckets"] == 4
-    assert summary["output_bytes"] < summary["input_bytes"]
-    res = pl.verify_job(spark, seq, out)
-    assert res["n_mismatch"] == 0 and res["n_joined"] == N_ROWS
-
-
-def test_kill_and_resume(spark, seq, tmp_path):
-    out = str(tmp_path / "run2")
-    # crash after 2 of 6 buckets
-    with pytest.raises(RuntimeError, match="injected failure"):
-        pl.run_encode_job(spark, seq, out, n_buckets=6, chunk_size=512,
-                          buckets_per_commit=2, fail_after_buckets=2)
-    assert len(pl.completed_buckets(spark, out)) == 2
-    # resume: must process only the remaining 4
-    summary = pl.run_encode_job(spark, seq, out, n_buckets=6, chunk_size=512,
-                                buckets_per_commit=2)
-    assert summary["resumed_buckets"] == 2
-    assert summary["processed_buckets"] == 4
-    res = pl.verify_job(spark, seq, out)
-    assert res["n_mismatch"] == 0 and res["n_joined"] == N_ROWS
-    # idempotent: a third run does nothing
-    summary = pl.run_encode_job(spark, seq, out, n_buckets=6, chunk_size=512)
-    assert summary["processed_buckets"] == 0
-
-
-def test_manifest_lineage_content(spark, seq, tmp_path):
-    out = str(tmp_path / "run3")
-    pl.run_encode_job(spark, seq, out, n_buckets=3, chunk_size=512)
-    mrows = [json.loads(open(os.path.join(out, "manifest", f)).read())
-             for f in sorted(os.listdir(os.path.join(out, "manifest")))
-             if f.endswith(".json")]
-    assert [r["bucket"] for r in mrows] == [0, 1, 2]
-    assert all(r["status"] == "done" for r in mrows)
-    total_rows = sum(r["n_rows"] for r in mrows)
-    enc_df = pl.read_encoded(spark, out)
-    assert total_rows == enc_df.count()
-    # codec histogram in the manifest matches the data
-    hist = {}
-    for r in mrows:
-        for k, v in json.loads(r["codec_hist"]).items():
-            hist[k] = hist.get(k, 0) + v
-    data_hist = {r["codec"]: r["count"]
-                 for r in enc_df.groupBy("codec").count().collect()}
-    assert hist == data_hist
-    # manifest doc counts: chunked docs may appear in >1 bucket, so the sum
-    # is >= distinct docs
-    assert sum(r["n_docs"] for r in mrows) >= seq.select("doc_id").distinct().count()
-
-
-def test_staging_lifecycle(spark, seq, tmp_path):
-    """Commit granularity stages the work list once; the staging survives a
-    kill (so the resume re-reads it instead of re-scanning the source) and
-    is deleted after the final bucket commits."""
-    out = str(tmp_path / "run_staged")
-    sdir, data_dir, marker = pl._staging_dirs(out)
-    with pytest.raises(RuntimeError, match="injected failure"):
-        pl.run_encode_job(spark, seq, out, n_buckets=6, chunk_size=512,
-                          buckets_per_commit=2, fail_after_buckets=2,
-                          stage_input=True)
-    # killed mid-commit: staging is on disk with its marker, partitioned
-    # by bucket so group reads prune
-    assert os.path.exists(marker)
-    params = json.loads(open(marker).read())
-    assert params["n_buckets"] == 6 and params["chunk_size"] == 512
-    assert sorted(d for d in os.listdir(data_dir) if d.startswith("bucket=")) \
-        == [f"bucket={b}" for b in range(6)]
-    marker_mtime = os.path.getmtime(marker)
-    summary = pl.run_encode_job(spark, seq, out, n_buckets=6, chunk_size=512,
-                                buckets_per_commit=2, stage_input=True)
-    assert summary["processed_buckets"] == 4
-    # resume REUSED the staging (marker untouched) and then removed it
-    assert not os.path.exists(sdir)
-    res = pl.verify_job(spark, seq, out)
-    assert res["n_mismatch"] == 0 and res["n_joined"] == N_ROWS
-    del marker_mtime  # staging is gone; reuse was proven by completion time
-
-
-def test_staging_pruned_read(spark, seq, tmp_path):
-    """A commit group's plan over the staged files must contain a
-    PartitionFilters entry on bucket — the scan reads only the group's
-    directories, not the whole staged work list."""
-    out = str(tmp_path / "run_prune")
-    from pyspark.sql import functions as F
-    chunked = pl.enc.split_skew(seq, 512).withColumn("bucket", pl.bucket_col(4))
-    staged = pl._ensure_staged(spark, chunked, out, 4, 512, files_per_bucket=2)
-    plan = staged.filter(F.col("bucket").isin([1, 3])) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "bucket" in plan
-    # and the marker round-trips: a second call must not rewrite
-    _, _, marker = pl._staging_dirs(out)
-    m0 = os.path.getmtime(marker)
-    pl._ensure_staged(spark, chunked, out, 4, 512, files_per_bucket=2)
-    assert os.path.getmtime(marker) == m0
-    # changed params invalidate: restaged under the new chunk grid
-    pl._ensure_staged(spark, chunked, out, 4, 256, files_per_bucket=2)
-    assert json.loads(open(marker).read())["chunk_size"] == 256
-    pl.drop_staging(spark, out)
-    assert not os.path.exists(os.path.join(out, "staging"))
-
-
-def test_staged_matches_unstaged(spark, seq, tmp_path):
-    """The staged plan and the legacy re-scan plan commit identical data
-    and manifests (modulo wall/ts)."""
-    a, b = str(tmp_path / "staged"), str(tmp_path / "rescan")
-    pl.run_encode_job(spark, seq, a, n_buckets=6, chunk_size=512,
-                      buckets_per_commit=2, stage_input=True)
-    pl.run_encode_job(spark, seq, b, n_buckets=6, chunk_size=512,
-                      buckets_per_commit=2)            # default re-scan
-    keys = ("bucket", "n_rows", "n_docs", "input_bytes", "output_bytes",
-            "codec_hist", "block_crc")
-    ma = sorted([tuple(r[k] for k in keys)
-                 for r in pl.read_manifest(spark, a).collect()])
-    mb = sorted([tuple(r[k] for k in keys)
-                 for r in pl.read_manifest(spark, b).collect()])
-    assert ma == mb
-    assert pl.verify_job(spark, seq, a)["n_mismatch"] == 0
-
-
-def test_bucket_assignment_deterministic(spark, seq):
-    a = seq.withColumn("chunk_idx", F.lit(0)).withColumn("b", pl.bucket_col(16))
-    b = seq.repartition(11).withColumn("chunk_idx", F.lit(0)).withColumn("b", pl.bucket_col(16))
-    am = {r["doc_id"]: r["b"] for r in a.collect()}
-    bm = {r["doc_id"]: r["b"] for r in b.collect()}
-    assert am == bm
 
 
 # ---------------------------------------------------------------------------
@@ -185,6 +56,32 @@ def test_files_kill_and_resume(spark, seq, seq_path, tmp_path):
     # idempotent third run
     assert pl.run_encode_job_files(spark, seq_path, out, n_buckets=6,
                                    chunk_size=512)["processed_buckets"] == 0
+
+
+def test_manifest_lineage_content(spark, seq, seq_path, tmp_path):
+    out = str(tmp_path / "frun_lineage")
+    summary = pl.run_encode_job_files(spark, seq_path, out, n_buckets=3,
+                                      chunk_size=512)
+    assert summary["output_bytes"] < summary["input_bytes"]
+    mrows = pl.read_manifest(spark, out).collect()
+    assert sorted(r["bucket"] for r in mrows) == [0, 1, 2]
+    assert all(r["status"] == "done" for r in mrows)
+    assert sum(r["output_bytes"] for r in mrows) < \
+        sum(r["input_bytes"] for r in mrows)
+    enc_df = pl.read_encoded(spark, out)
+    assert sum(r["n_rows"] for r in mrows) == enc_df.count()
+    # codec histogram in the manifest matches the data
+    hist = {}
+    for r in mrows:
+        for k, v in json.loads(r["codec_hist"]).items():
+            hist[k] = hist.get(k, 0) + v
+    data_hist = {r["codec"]: r["count"]
+                 for r in enc_df.groupBy("codec").count().collect()}
+    assert hist == data_hist
+    # a doc's chunks all come from one input file, hence one bucket: the
+    # manifest doc counts are exact
+    assert sum(r["n_docs"] for r in mrows) == \
+        seq.select("doc_id").distinct().count()
 
 
 def test_files_manifest_records_file_lineage(spark, seq_path, tmp_path):
@@ -248,6 +145,28 @@ def test_files_crash_between_write_and_manifest_is_cleaned(
     assert res["n_decoded"] == N_ROWS
 
 
+def test_files_orphan_commit_dir_is_unreadable(spark, seq_path, tmp_path):
+    """A crash in the FIRST group's manifest window leaves an orphan
+    commit dir and no manifest at all. Reads are manifest-only: the
+    orphan's rows must not be visible, and the empty read has the same
+    columns as a committed one."""
+    out = str(tmp_path / "frun_orphan")
+    with pytest.raises(RuntimeError, match="between data write"):
+        pl.run_encode_job_files(spark, seq_path, out, n_buckets=6,
+                                chunk_size=512, buckets_per_commit=2,
+                                fail_before_manifest_group=0)
+    assert pl.completed_buckets(spark, out) == set()
+    assert any(d.startswith("commit=")
+               for d in os.listdir(os.path.join(out, "data")))
+    empty = pl.read_encoded(spark, out)
+    assert empty.count() == 0
+    pl.run_encode_job_files(spark, seq_path, out, n_buckets=6,
+                            chunk_size=512, buckets_per_commit=2)
+    committed = pl.read_encoded(spark, out)
+    assert committed.count() > 0
+    assert empty.dtypes == committed.dtypes
+
+
 def test_files_crash_then_regrouped_resume(spark, seq, seq_path, tmp_path):
     """The failure mode the round-5 design could not survive: crash in
     the manifest window, then resume with a DIFFERENT buckets_per_commit
@@ -294,9 +213,10 @@ def test_files_size_drift_refused(spark, seq, seq_path, tmp_path):
                                 chunk_size=512, buckets_per_commit=1)
 
 
-def test_files_matches_hash_bucket_data(spark, seq, seq_path, tmp_path):
-    """File-scope and hash-bucket modes commit the same DATA (decoded
-    equality via verify), just under different resume keys."""
+def test_files_verify_against_reread_input(spark, seq_path, tmp_path):
+    """The committed table decodes to exactly the rows of the input
+    files, verified against a fresh read of the input path rather than
+    the cached frame the files were written from."""
     out = str(tmp_path / "frun5")
     pl.run_encode_job_files(spark, seq_path, out, n_buckets=4,
                             chunk_size=512, buckets_per_commit=2)

@@ -258,9 +258,12 @@ def test_verify_job_releases_decode_cache(spark, tmp_path):
     from parquet_playground_rs_spark.sources.generator import sequences_df
 
     dec.release_all_decode_caches()  # clean slate
-    seq = sequences_df(spark, 200, seed=42, partitions=2)
+    src = str(tmp_path / "src")
+    sequences_df(spark, 200, seed=42, partitions=4).write.parquet(src)
+    seq = spark.read.parquet(src)
     out = str(tmp_path / "pipe")
-    pipeline.run_encode_job(spark, seq, out, n_buckets=4, chunk_size=1024)
+    pipeline.run_encode_job_files(spark, src, out, n_buckets=4,
+                                  chunk_size=1024)
     verdict = pipeline.verify_job(spark, seq, out)
     assert verdict["n_mismatch"] == 0
     assert dec._LIVE_DECODE_CACHES == []
@@ -282,19 +285,22 @@ def test_decoded_tokens_context_manager(spark):
 
 
 def test_pipeline_concurrent_commits_match_sequential(spark, tmp_path):
-    """concurrent_commits overlaps disjoint-partition commit groups; the
-    result (data + manifests) must equal the sequential run's."""
+    """concurrent_commits overlaps commit groups that write disjoint
+    commit dirs; the result (data + manifests) must equal the sequential
+    run's."""
     from parquet_playground_rs_spark.plans import pipeline
     from parquet_playground_rs_spark.sources.generator import sequences_df
 
-    seq = sequences_df(spark, 400, seed=5, partitions=4)
+    src = str(tmp_path / "src")
+    sequences_df(spark, 400, seed=5, partitions=12).write.parquet(src)
+    seq = spark.read.parquet(src)
     seq_out = str(tmp_path / "seq")
     con_out = str(tmp_path / "con")
-    s1 = pipeline.run_encode_job(spark, seq, seq_out, n_buckets=12,
-                                 chunk_size=1024, buckets_per_commit=3)
-    s2 = pipeline.run_encode_job(spark, seq, con_out, n_buckets=12,
-                                 chunk_size=1024, buckets_per_commit=3,
-                                 concurrent_commits=4)
+    s1 = pipeline.run_encode_job_files(spark, src, seq_out, n_buckets=12,
+                                       chunk_size=1024, buckets_per_commit=3)
+    s2 = pipeline.run_encode_job_files(spark, src, con_out, n_buckets=12,
+                                       chunk_size=1024, buckets_per_commit=3,
+                                       concurrent_commits=4)
     assert s1["processed_buckets"] == s2["processed_buckets"] == 12
     assert s1["n_rows"] == s2["n_rows"]
     assert s1["output_bytes"] == s2["output_bytes"]
@@ -304,10 +310,12 @@ def test_pipeline_concurrent_commits_match_sequential(spark, tmp_path):
           for r in pipeline.read_manifest(spark, con_out).collect()}
     assert m1 == m2
     assert pipeline.verify_job(spark, seq, con_out)["n_mismatch"] == 0
-    with pytest.raises(ValueError):
-        pipeline.run_encode_job(spark, seq, str(tmp_path / "x"),
-                                n_buckets=4, buckets_per_commit=1,
-                                fail_after_buckets=1, concurrent_commits=2)
+    for inject in ({"fail_after_buckets": 1},
+                   {"fail_before_manifest_group": 0}):
+        with pytest.raises(ValueError, match="failure injection"):
+            pipeline.run_encode_job_files(
+                spark, src, str(tmp_path / "x"), n_buckets=4,
+                buckets_per_commit=1, concurrent_commits=2, **inject)
 
 
 def test_ivf_index_query_matches_one_pass(spark, tmp_path):

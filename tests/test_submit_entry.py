@@ -59,13 +59,12 @@ def test_submit_entry_encode_verify_and_resume(spark, seq_input, tmp_path,
     assert again["verify"]["n_mismatch"] == 0
 
 
-def test_submit_entry_hash_scope(spark, seq_input, tmp_path, capsys,
-                                 monkeypatch):
-    out = str(tmp_path / "out_hash")
+def test_submit_entry_verify_chunks(spark, seq_input, tmp_path, capsys,
+                                    monkeypatch):
+    out = str(tmp_path / "out_chunks")
     summary = _run_entry(capsys, monkeypatch, [
         "--input", seq_input, "--output", out,
-        "--scope", "hash", "--buckets", "4", "--chunk-size", "128",
-        "--verify", "chunks",
+        "--buckets", "4", "--chunk-size", "128", "--verify", "chunks",
     ])
     assert summary["verify"]["n_mismatch"] == 0
     # chunks mode verifies per-chunk rows, one per encoded chunk
