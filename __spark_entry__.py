@@ -972,14 +972,14 @@ def _q_ivf_pq_append_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Index growth without a rebuild (round 7, the index-side half of
     the growing-corpus story; FAISS IndexIVF.add semantics): build the
     IVF-PQ index on ~half the embeddings, `append_ivf_pq_index` the
-    rest under the FROZEN centroids/codebooks (staged write + per-file
-    rename publish, idempotent roll-forward — see the operator
+    rest under the FROZEN centroids/codebooks (a new group of cell
+    files published by one manifest rename — see the operator
     docstring), then query the grown index. The verdict carries the
     same brute-force recall-floor contract as ivf_pq_topk — brute force
     runs over the FULL corpus, so recall holding proves appended
     vectors are candidate-visible and exactly refinable — plus
     integrity bits: every corpus row is in the index exactly once, and
-    the append actually moved files into live cells."""
+    the append's publish actually made files live in the cells."""
     import shutil
 
     from parquet_playground_rs_spark.operators import similarity
@@ -1026,11 +1026,12 @@ def _q_ivf_pq_compact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     thirds in two batches (each append lands ~1 file per touched cell —
     the accretion `compact_ivf_pq_cells` exists for), snapshot the
     query results, compact, and require the post-compaction results
-    ROW-IDENTICAL (the read-back-verified atomic swap must be invisible
-    to queries) on top of the same full-corpus brute-force recall floor
-    as the other IVF rows. Integrity bits: every corpus row indexed
-    exactly once after the swap, and compaction actually reduced
-    files."""
+    ROW-IDENTICAL (the read-back-verified merged group, published with
+    `supersedes` by one manifest rename, must be invisible to queries)
+    on top of the same full-corpus brute-force recall floor as the
+    other IVF rows. Integrity bits: every corpus row indexed exactly
+    once after the superseded files are collected, and compaction
+    actually reduced files."""
     import shutil
 
     from parquet_playground_rs_spark.operators import similarity

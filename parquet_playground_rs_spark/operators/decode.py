@@ -162,9 +162,13 @@ def decode_tokens(encoded: DataFrame, materialize: bool | None = None) -> DataFr
     # metadata-bounded at any scale), where keeping the empty branch
     # costs a second table scan plus a zero-row shuffle/union every
     # action (measured 3.9 -> 3.3 s on the round-trip verify,
-    # interleaved A/B). Probed only on cheap-rescan inputs — a composed
-    # (persisted) pipeline keeps the lazy two-branch plan so decode
-    # never forces its upstream at call time.
+    # interleaved A/B). Probed only on cheap-rescan inputs: a composed
+    # pipeline that decode persists itself keeps the lazy two-branch
+    # plan and is not forced at call time. A caller-persisted input
+    # counts as cheap-rescan even before it is materialized, so for it
+    # this isEmpty() probe DOES force the upstream at call time — the
+    # probe job runs it and fills the cache partitions it scans (all of
+    # them when no row has n_chunks > 1).
     skip_multi = bool(cheap_rescan) and \
         encoded.filter(F.col("n_chunks") > 1).isEmpty()
     if skip_multi:

@@ -319,10 +319,13 @@ def minhash_dedup(docs: DataFrame, n: int = 3, k: int = 64, bands: int = 16,
     signatures and once per set join (three scans of the corpus + three
     shingle shuffles; the banding/confirm stages downstream also re-
     execute their input per branch). The combined frame is persisted
-    (MEMORY_AND_DISK, ~signature+docset bytes, a vanishing fraction of
-    the corpus) so banding, bucket capping, and both confirm joins read
-    the aggregation instead of re-running it — measured 15.3 -> 9.4 s
-    on the bench corpus with the confirmed pair set byte-identical.
+    (MEMORY_AND_DISK) so banding, bucket capping, and both confirm joins
+    read the aggregation instead of re-running it — measured 15.3 ->
+    9.4 s on the bench corpus with the confirmed pair set
+    byte-identical. The persist is NOT small: next to the k-long
+    signature it holds each document's raw word-n-gram string set
+    (`sh_set`), and every word recurs in up to n shingle strings, so
+    its size is on the order of the corpus text or larger.
     persist=False opts out (callers managing their own lifecycle); the
     cache is registered for release via release_dedup_caches().
     """

@@ -20,8 +20,11 @@ filtered to similarity >= threshold.
 from __future__ import annotations
 
 import numpy as np
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .. import storage
 
 
 def _dot(a, b):
@@ -660,11 +663,10 @@ def _pq_encoded_frame(units: DataFrame, C: np.ndarray,
                  unit_col],
                 names=[id_col, "pq_code", "cell", "unit"])
 
-    unit_ddl = "array<float>" if unit_dtype == "float32" else "array<double>"
     return units.mapInArrow(
         mapper,
         f"{id_col} {id_type}, pq_code binary, cell int, "
-        f"unit {unit_ddl}")
+        f"unit {_UNIT_DDL[unit_dtype]}")
 
 
 def write_ivf_pq_index(corpus: DataFrame, dim: int, path: str,
@@ -674,8 +676,12 @@ def write_ivf_pq_index(corpus: DataFrame, dim: int, path: str,
                        centroids: np.ndarray | None = None,
                        unit_dtype: str = "float64") -> tuple:
     """Persist a product-quantized IVF index: per row (id, m-byte PQ
-    code, float64 unit vector) under ``path/cells/cell=<j>/`` plus the
-    two model artifacts (coarse centroids, PQ codebooks).
+    code, float64 unit vector) under ``path/cells/cell=<j>/g=0/`` plus
+    the two model artifacts (coarse centroids, PQ codebooks), published
+    as group 0 of the index's manifest log (see the storage section
+    below). A rebuild at the same path starts a NEW manifest log:
+    nothing published against the old model — e.g. an appended batch's
+    fingerprint — carries over.
 
     This composes the engine's two ANN halves (round-4 judge ask): the
     float IVF index (write_ivf_index) scans 8*dim float bytes per
@@ -741,86 +747,56 @@ def write_ivf_pq_index(corpus: DataFrame, dim: int, path: str,
     # appended batch whose residuals sit far above it quantizes worse
     # than the measured 50/50 recall price and should trigger a rebuild
     resid_norms = np.sqrt(((X - C[cells]) ** 2).sum(axis=1))
-    _write_model_stats(spark, path, resid_norms, cells, C.shape[0])
 
     id_type = corpus.schema[id_col].dataType.simpleString()
     encoded = _pq_encoded_frame(units, C, codebooks, dim, unit_dtype,
                                 id_col, id_type)
-    # one file per cell dir per shuffle partition (same rebalance trade
-    # as write_ivf_index)
-    (encoded.repartition(F.col("cell"))
-     .write.mode("overwrite").partitionBy("cell")
-     .parquet(f"{path}/cells"))
-    cent_rows = [(int(j), [float(w) for w in C[j]])
-                 for j in range(C.shape[0])]
-    spark.createDataFrame(cent_rows, "cell int, weights array<double>") \
-        .coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-    cb_rows = [(int(j), int(t), [float(w) for w in codebooks[j, t]])
-               for j in range(codebooks.shape[0])
-               for t in range(codebooks.shape[1])]
-    spark.createDataFrame(
-        cb_rows, "subspace int, code int, weights array<double>") \
-        .coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
+    with storage.JobLock(spark, path):
+        # first, so a crash anywhere below leaves an index every reader
+        # and writer refuses until it is rebuilt
+        storage.drop_manifests(spark, path)
+        _write_model_stats(spark, path, resid_norms, cells, C.shape[0])
+        # one file per cell dir per shuffle partition (same rebalance
+        # trade as write_ivf_index)
+        _write_cell_group(encoded.repartition(F.col("cell")), path, 0,
+                          "overwrite")
+        cent_rows = [(int(j), [float(w) for w in C[j]])
+                     for j in range(C.shape[0])]
+        spark.createDataFrame(cent_rows, "cell int, weights array<double>") \
+            .coalesce(1).write.mode("overwrite") \
+            .parquet(f"{path}/centroids")
+        cb_rows = [(int(j), int(t), [float(w) for w in codebooks[j, t]])
+                   for j in range(codebooks.shape[0])
+                   for t in range(codebooks.shape[1])]
+        spark.createDataFrame(
+            cb_rows, "subspace int, code int, weights array<double>") \
+            .coalesce(1).write.mode("overwrite") \
+            .parquet(f"{path}/codebooks")
+        n_rows, n_cells, n_files = _group_stats(spark, path, 0)
+        storage.publish_group(spark, path, 0, [
+            {"id_col": id_col, "id_type": id_type,
+             "unit_dtype": unit_dtype, "n_rows": n_rows,
+             "n_cells": n_cells, "n_files": n_files}])
     return C, codebooks
 
 
-_STAGE_FP_NAME = "_BATCH_FP.json"
-_LAST_APPEND_NAME = "_LAST_APPEND.json"
-
-
-def _batch_fingerprint(df: DataFrame, id_col: str,
-                       vec_col: str | None = None) -> dict:
-    """Order-independent fingerprint of an append batch: row count +
-    two prime-modded xxhash64 sums over the ids, plus (round 8, round-7
-    ADVICE) a CONTENT sum ``h3`` binding each id to its vector — a
-    re-append with the same id multiset but corrected/changed
-    embeddings no longer matches a stale stage of the old vectors.
-    Written into the stage dir so a crashed append retried WITH THE
-    SAME BATCH is recognized and resolved by finishing the staged
-    publish instead of re-encoding (which would index every vector
-    twice)."""
-    aggs = [
+def _batch_fingerprint(df: DataFrame, id_col: str, vec_col: str) -> dict:
+    """Order-independent fingerprint of an append batch: row count, two
+    prime-modded xxhash64 sums over the ids, and a content sum ``h3``
+    binding each id to its vector, so a re-append of the same ids with
+    corrected embeddings is a different batch. A published append's
+    manifest row carries it; a retry of that append matches it and is
+    not indexed twice."""
+    r = df.agg(
         F.count("*").alias("n"),
         F.sum(F.pmod(F.xxhash64(F.col(id_col)),
                      F.lit(1_000_000_007))).alias("h1"),
         F.sum(F.pmod(F.xxhash64(F.col(id_col), F.lit(7919)),
-                     F.lit(1_000_000_009))).alias("h2")]
-    if vec_col is not None:
-        aggs.append(
-            F.sum(F.pmod(F.xxhash64(F.col(id_col), F.col(vec_col)),
-                         F.lit(1_000_000_021))).alias("h3"))
-    r = df.agg(*aggs).first()
-    fp = {"n_rows": int(r["n"]), "h1": int(r["h1"] or 0),
-          "h2": int(r["h2"] or 0)}
-    if vec_col is not None:
-        fp["h3"] = int(r["h3"] or 0)
-    return fp
-
-
-def _fp_matches(stored: dict | None, incoming: dict) -> bool:
-    """Whether a stored fingerprint identifies the incoming batch. The
-    content sum ``h3`` participates when the stored fingerprint has it;
-    fingerprints written by older builds (id sums only) keep matching
-    on the id keys alone."""
-    if stored is None:
-        return False
-    keys = ["n_rows", "h1", "h2"]
-    if "h3" in stored and "h3" in incoming:
-        keys.append("h3")
-    return all(stored.get(k) == incoming.get(k) for k in keys)
-
-
-def _ids_match_content_differs(stored: dict | None,
-                               incoming: dict) -> bool:
-    """The correction shape: same id multiset, different vectors — the
-    stale stage holds OUTDATED encodings of these exact ids and must be
-    discarded, not published (publishing it would silently index the
-    old vectors under the new batch's ids)."""
-    if stored is None or "h3" not in stored or "h3" not in incoming:
-        return False
-    return (all(stored.get(k) == incoming.get(k)
-                for k in ("n_rows", "h1", "h2"))
-            and stored["h3"] != incoming["h3"])
+                     F.lit(1_000_000_009))).alias("h2"),
+        F.sum(F.pmod(F.xxhash64(F.col(id_col), F.col(vec_col)),
+                     F.lit(1_000_000_021))).alias("h3")).first()
+    return {"n_rows": int(r["n"]), "h1": int(r["h1"] or 0),
+            "h2": int(r["h2"] or 0), "h3": int(r["h3"] or 0)}
 
 
 _MODEL_STATS_NAME = "_MODEL_STATS.json"
@@ -843,11 +819,9 @@ def _write_model_stats(spark, path: str, resid_norms,
                        cells, n_cells: int) -> None:
     import json as _json
 
-    from ..plans.pipeline import _write_small_file
-
     q = np.percentile(resid_norms, [10, 50, 90])
     occ = np.bincount(cells, minlength=n_cells) / max(1, len(cells))
-    _write_small_file(spark, f"{path}/{_MODEL_STATS_NAME}", _json.dumps(
+    storage.write_small_file(spark, f"{path}/{_MODEL_STATS_NAME}", _json.dumps(
         {"residual_p10": float(q[0]), "residual_p50": float(q[1]),
          "residual_p90": float(q[2]), "n_sample": int(len(resid_norms)),
          "top_cell_share": float(occ.max()), "n_cells": int(n_cells)}))
@@ -876,9 +850,7 @@ def _drift_canary(spark, path: str, units: DataFrame, C: np.ndarray,
     stats or the batch is empty (no signal either way)."""
     import json as _json
 
-    from ..plans.pipeline import _read_small_file
-
-    raw = _read_small_file(spark, f"{path}/{_MODEL_STATS_NAME}")
+    raw = storage.read_small_file(spark, f"{path}/{_MODEL_STATS_NAME}")
     if raw is None:
         return None
     stats = _json.loads(raw)
@@ -915,87 +887,155 @@ def _drift_canary(spark, path: str, units: DataFrame, C: np.ndarray,
             "drift_residual_alert": bool(resid_alert)}
 
 
-def _read_stage_fingerprint(spark, tmp_dir: str) -> dict | None:
-    """The staged batch's fingerprint, or None if the stage is absent
-    or torn (no _SUCCESS / no fingerprint — both mean the staging never
-    completed, since the fingerprint is written right after the staged
-    data write)."""
-    import json as _json
+# ---------------------------------------------------------------------------
+# IVF-PQ index storage: cell-file groups under the shared manifest log
+# ---------------------------------------------------------------------------
+#
+# The index publishes through the encoded table's protocol
+# (`parquet_playground_rs_spark.storage`). A build, an append and a
+# compaction each write one GROUP of cell files under
+# ``path/cells/cell=<j>/g=<gid>/`` — dirs that only that group id owns —
+# and publish it with one rename of ``path/manifest/group-<gid>.json``.
+# A group's manifest holds one row per corpus batch in its files (the
+# build, or an append carrying its batch fingerprint); a compaction
+# carries the rows of every group it merges. ``cells/cell=<j>/`` stays
+# the per-cell root, so probed-cell partition pruning is unchanged.
 
-    from ..plans.pipeline import _hadoop_fs, _read_small_file
-
-    fs, tjp, jvm = _hadoop_fs(spark, tmp_dir)
-    Path = jvm.org.apache.hadoop.fs.Path
-    if not fs.exists(tjp) or not fs.exists(Path(tmp_dir, "_SUCCESS")):
-        return None
-    raw = _read_small_file(spark, f"{tmp_dir}/{_STAGE_FP_NAME}")
-    return None if raw is None else _json.loads(raw)
+_UNIT_DDL = {"float64": "array<double>", "float32": "array<float>"}
+# the per-batch row fields every group carries for the readers
+_META_KEYS = ("id_col", "id_type", "unit_dtype")
 
 
-def _publish_staged_cells(spark, index_root: str, cells_dir: str,
-                          tmp_dir: str,
-                          fail_after_moves: int | None = None) -> int:
-    """Move a staged append's cell files into the live index; returns
-    the number of files moved. Idempotent roll-forward: a staged dir
-    WITHOUT ``_SUCCESS`` + fingerprint is a torn staging and is deleted
-    (nothing of it was ever published); a complete one is published to
-    completion — renames are per-file, part-file basenames are
-    write-job-unique, a file already moved is absent from the stage on
-    re-entry, and a file present on BOTH sides (an object-store
-    copy+delete rename that crashed between the copy and the delete)
-    counts as moved and only the stage copy is dropped — then the
-    published batch's fingerprint is persisted durably at
-    ``index_root/_LAST_APPEND.json`` BEFORE the stage dir is removed
-    (round-7 ADVICE: a retry of an append that fully published — crash
-    between the stage delete and the caller recording success — must be
-    recognized and short-circuited, not re-encoded as a new batch),
-    and the stage dir is removed. A crash anywhere re-enters this
-    function on the next append call."""
-    import json as _json
+def _gid_glob(gids: list[int]) -> str:
+    return (str(gids[0]) if len(gids) == 1
+            else "{" + ",".join(str(g) for g in gids) + "}")
 
-    from ..plans.pipeline import _hadoop_fs, _write_small_file
 
-    fs, tjp, jvm = _hadoop_fs(spark, tmp_dir)
-    if not fs.exists(tjp):
-        return 0
-    Path = jvm.org.apache.hadoop.fs.Path
-    staged_fp = _read_stage_fingerprint(spark, tmp_dir)
-    if staged_fp is None:
-        fs.delete(tjp, True)
-        return 0
-    moves = 0
-    for st in fs.listStatus(tjp):
-        cname = st.getPath().getName()
-        if not cname.startswith("cell="):
+def _write_cell_group(frame: DataFrame, path: str, gid: int,
+                      mode: str) -> None:
+    """Write `frame` (already shuffled on its cell) as group `gid`'s
+    files: one ``cell=<j>/g=<gid>/`` dir per cell."""
+    (frame.withColumn("g", F.lit(gid))
+     .write.mode(mode).partitionBy("cell", "g").parquet(f"{path}/cells"))
+
+
+def _glob(spark, path: str, pattern: str) -> list:
+    """FileStatus of every entry under ``path/cells`` matching the
+    Hadoop glob `pattern`."""
+    fs, _, jvm = storage.hadoop_fs(spark, path)
+    return list(fs.globStatus(jvm.org.apache.hadoop.fs.Path(
+        f"{path}/cells/{pattern}")) or [])
+
+
+def _cells_of(spark, path: str, gids: list[int]) -> DataFrame:
+    """(id, pq_code, unit, cell) rows of exactly the groups `gids`: one
+    relation over their ``cell=<j>/g=<gid>`` dirs."""
+    dirs = [str(st.getPath())
+            for st in _glob(spark, path, f"cell=*/g={_gid_glob(gids)}")]
+    return (spark.read.option("basePath", f"{path}/cells").parquet(*dirs)
+            .drop("g"))
+
+
+def _group_files(spark, path: str, gids: list[int]) -> list:
+    """FileStatus of every data file of the groups `gids`."""
+    return [st for st in _glob(spark, path, f"cell=*/g={_gid_glob(gids)}/*")
+            if not st.getPath().getName().startswith(("_", "."))]
+
+
+def _group_dirs(spark, path: str) -> dict[int, list[str]]:
+    """{gid: its ``cell=<j>/g=<gid>`` dirs} on disk."""
+    dirs: dict[int, list[str]] = {}
+    for st in _glob(spark, path, "cell=*/g=*"):
+        dirs.setdefault(int(st.getPath().getName()[2:]), []).append(
+            str(st.getPath()))
+    return dirs
+
+
+def _group_stats(spark, path: str, gid: int) -> tuple[int, int, int]:
+    """(rows, cells, data files) of group `gid`, read back from disk."""
+    files = _group_files(spark, path, [gid])
+    if not files:
+        return 0, 0, 0
+    per_cell = _cells_of(spark, path, [gid]).groupBy("cell").count() \
+        .collect()
+    return sum(r["count"] for r in per_cell), len(per_cell), len(files)
+
+
+def _no_manifest_error(path: str) -> IOError:
+    return IOError(
+        f"no published IVF-PQ index at {path}: its cells have no group "
+        "manifest (written before the manifest log, or its build "
+        "crashed) — rebuild it with write_ivf_pq_index")
+
+
+def _live_cells(spark, path: str, live: dict[int, list[dict]]) -> DataFrame:
+    meta = next(iter(live.values()))[0]
+    gids = sorted(g for g, rows in live.items()
+                  if sum(int(r["n_rows"]) for r in rows))
+    if not gids:
+        return spark.createDataFrame(
+            [], f"{meta['id_col']} {meta['id_type']}, pq_code binary, "
+                f"unit {_UNIT_DDL[meta['unit_dtype']]}, cell int")
+    return _cells_of(spark, path, gids)
+
+
+_SNAPSHOT_TRIES = 3
+
+
+def read_ivf_pq_cells(spark, path: str) -> DataFrame:
+    """The index rows (id, pq_code, unit, cell) of the live groups of ONE
+    manifest snapshot — the read every query makes. It never writes or
+    locks. A reader's relation lists its files when it is built, and a
+    later compaction's superseded files stay on disk until the
+    retention it stamped expires, so a reader that resolved before the
+    publish still scans the old snapshot.
+
+    The listing itself can race a GC pass that runs between the
+    snapshot and the listing, which would drop files silently (or fail
+    the listing once every dir is gone). GC deletes a group's manifest
+    before its files, so the resolved groups are checked again after
+    the listing: if every one still has its manifest, the listing saw
+    all of their files; otherwise the read resolves a fresh
+    snapshot."""
+    for _ in range(_SNAPSHOT_TRIES):
+        groups = storage.read_groups(spark, path)
+        live = {g: groups[g] for g in storage.live_group_ids(groups)}
+        if not live:
+            raise _no_manifest_error(path)
+        try:
+            cells = _live_cells(spark, path, live)
+        except AnalysisException:
+            if set(live) <= set(storage.read_groups(spark, path)):
+                raise  # not a race: the groups are all still published
             continue
-        dst_cell = Path(cells_dir, cname)
-        fs.mkdirs(dst_cell)
-        for f in fs.listStatus(st.getPath()):
-            fname = f.getPath().getName()
-            if fname.startswith(("_", ".")):
-                continue
-            if fail_after_moves is not None and moves >= fail_after_moves:
-                raise RuntimeError(
-                    "injected failure mid-publish of staged index append")
-            dst = Path(dst_cell, fname)
-            if fs.exists(dst):
-                # S3A rename = copy+delete; a crash between the two
-                # leaves the file live AND staged — already published,
-                # drop the stage copy instead of wedging on the rename
-                fs.delete(f.getPath(), False)
-            elif not fs.rename(f.getPath(), dst):
-                raise IOError(
-                    f"index-append publish: rename failed for {fname}")
-            moves += 1
-    _write_small_file(spark, f"{index_root}/{_LAST_APPEND_NAME}",
-                      _json.dumps(staged_fp))
-    fs.delete(tjp, True)
-    return moves
+        if set(live) <= set(storage.read_groups(spark, path)):
+            return cells
+    raise IOError(
+        f"the IVF-PQ index at {path} was compacted and collected during "
+        f"each of {_SNAPSHOT_TRIES} reads; retry, or compact with a "
+        "positive gc_min_age_sec so readers can drain")
+
+
+def _index_cleanup(spark, path: str) -> tuple[int, int, dict]:
+    """A writer's entry pass, under the job lock: drop a killed Spark
+    write's staging under ``cells/`` (its committed tasks would
+    otherwise be merged into the next write's output), then run the
+    shared GC pass. Returns ``(stale, collected, live)`` as
+    `storage.collect_garbage`; an index with no published group is
+    refused."""
+    fs, _, jvm = storage.hadoop_fs(spark, path)
+    fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/cells/_temporary"),
+              True)
+    stale, collected, live = storage.collect_garbage(
+        spark, path, lambda: _group_dirs(spark, path))
+    if not live:
+        raise _no_manifest_error(path)
+    return stale, collected, live
 
 
 def append_ivf_pq_index(new_corpus: DataFrame, dim: int, path: str,
                         id_col: str = "vec_id", vec_col: str = "embedding",
-                        fail_after_moves: int | None = None,
+                        fail_before_publish: bool = False,
                         lock_lease_sec: float = 60.0) -> dict:
     """Add vectors to a persisted IVF-PQ index WITHOUT a rebuild — the
     index-side half of the growing-corpus story (the encode pipeline's
@@ -1003,9 +1043,9 @@ def append_ivf_pq_index(new_corpus: DataFrame, dim: int, path: str,
     centroids and PQ codebooks are FROZEN: new vectors are
     unit-normalized, assigned to existing cells, residual-encoded with
     the existing codebooks (the same `_pq_encoded_frame` pass as the
-    build), and their files land in the existing ``cell=<j>/``
-    partitions, so `ivf_pq_query` needs no changes — probed-cell
-    pruning, ADC scoring, and exact refine see old and new rows alike.
+    build), and land as a new group under the existing ``cell=<j>/``
+    roots, so probed-cell pruning, ADC scoring, and exact refine see
+    old and new rows alike.
 
     Freezing the model is the standard trade, and it is MEASURED
     (scripts/rehearsal_ann_append.py, BENCH/ann_append.json): at 1M
@@ -1020,165 +1060,86 @@ def append_ivf_pq_index(new_corpus: DataFrame, dim: int, path: str,
     pipeline's input contract).
 
     Drift canary: each append samples the batch (same deterministic
-    lowest-hash sample the build used) and compares its coarse
-    residual norms against the build sample's distribution stored in
-    ``_MODEL_STATS.json``; a fraction above the build p90 exceeding
-    ``drift_alert_threshold`` sets ``drift_alert: True`` in the
-    summary — appending a DRIFTED distribution degrades recall beyond
-    the measured IID price, and the advised action is a rebuild.
+    lowest-hash sample the build used) and compares it with the build
+    sample's stats in ``_MODEL_STATS.json`` (see `_drift_canary`);
+    ``drift_alert: True`` in the summary advises a rebuild.
 
-    Crash-safe publish, EXACTLY-ONCE under same-batch retry: the
-    encoded batch is staged as a complete partitioned write under
-    ``path/cells_append_tmp``, stamped with an order-independent id
-    fingerprint of the batch (the fingerprint file, written after the
-    data, is the stage commit — ``_SUCCESS`` alone without it reads as
-    torn and is discarded). On entry, a pending stage whose fingerprint
-    MATCHES the incoming batch (ids AND vector content) means the
-    caller is retrying a crashed append of the same vectors: the staged
-    publish is finished and the function returns WITHOUT re-encoding
-    (re-encoding would index the batch twice); a pending stage with the
-    same ids but DIFFERENT vectors (a correction re-append) is
-    discarded, never published; any other pending stage is finished
-    first, then the new batch proceeds. The publish persists the
-    batch fingerprint durably at ``path/_LAST_APPEND.json`` BEFORE
-    removing the stage, so a retry of an append that FULLY published
-    (crash between the stage delete and the caller recording success)
-    is short-circuited (``already_published: True``) instead of being
-    indexed twice as a "new" batch. Per-file renames tolerate the
-    object-store copy+delete crash shape (a file live AND staged counts
-    as moved; the stage copy is dropped). A reader mid-publish sees a
-    subset of the NEW vectors (never duplicates, never missing old
-    ones) — acceptable for ANN search and called out here. The
-    stored refine width (float32/float64) is read from the live index
-    schema so appended files always match. Appends are single-writer:
-    the same ``job.lock`` lease as the encode pipeline (held under
-    ``path/``) makes a concurrent second appender fail loudly instead
-    of overwriting the first one's stage dir mid-publish. Returns
-    ``{"appended_rows", "files_moved", "cells_touched",
-    "recovered_moves"}``."""
-    from ..plans.pipeline import _JobLock
+    Publish, exactly once: under the job lock, the batch is written as
+    a new group ``g=<gid>`` that only this append owns, read back, and
+    published by ONE manifest rename whose row carries the batch
+    fingerprint (ids AND vector content). A crash before the publish
+    leaves an orphan group no reader resolves; the next writer's
+    cleanup deletes it, so a retry indexes the batch once. A retry
+    after the publish — also after a compaction merged the group, since
+    compaction carries the rows — matches the fingerprint in a live
+    manifest and returns ``already_published: True`` without writing.
+    The stored refine width and id type come from the index manifest,
+    so appended files always match. ``fail_before_publish`` (tests
+    only) crashes after the read-back, before the publish.
 
+    Returns ``{"appended_rows", "files_moved", "cells_touched",
+    "stale_groups_cleaned", "superseded_groups_cleaned"}`` plus the
+    drift fields; ``files_moved`` counts the files the publish made
+    live."""
     spark = new_corpus.sparkSession
-    lock = _JobLock(spark, path, lease_sec=lock_lease_sec).acquire()
-    ok = False
-    try:
-        result = _append_ivf_pq_locked(spark, new_corpus, dim, path,
-                                       id_col, vec_col, fail_after_moves)
-        ok = True
-        return result
-    finally:
-        lock.release(raise_on_stolen=ok)
+    with storage.JobLock(spark, path, lease_sec=lock_lease_sec):
+        return _append_ivf_pq_locked(spark, new_corpus, dim, path, id_col,
+                                     vec_col, fail_before_publish)
 
 
 def _append_ivf_pq_locked(spark, new_corpus, dim, path, id_col, vec_col,
-                          fail_after_moves) -> dict:
-    import json as _json
-
-    from ..plans.pipeline import (_hadoop_fs, _read_small_file,
-                                  _write_small_file)
-
-    # a crashed cell compaction's swap is finished before anything
-    # else: appends write into the live cell dirs the swap touches
-    _recover_cell_swap(spark, path)
-    cells_dir = f"{path}/cells"
-    tmp_dir = f"{path}/cells_append_tmp"
-    # retry safety: if a COMPLETE stage is pending and its fingerprint
-    # matches this batch (ids AND vector content — h3), the caller is
-    # retrying a crashed append of the SAME vectors — finish the staged
-    # publish and return, never re-encode (that would index the batch
-    # twice). A pending stage with the SAME ids but DIFFERENT content
-    # is the correction shape: the stage holds outdated encodings of
-    # these exact ids and is DISCARDED (publishing it would silently
-    # index the old vectors). Any other pending stage is a crashed
-    # different batch: finished first (recovered), then this batch
-    # proceeds normally.
-    incoming_fp = _batch_fingerprint(new_corpus, id_col, vec_col)
-    staged_fp = _read_stage_fingerprint(spark, tmp_dir)
-    if _fp_matches(staged_fp, incoming_fp):
-        moved = _publish_staged_cells(spark, path, cells_dir, tmp_dir,
-                                      fail_after_moves)
-        return {"appended_rows": int(staged_fp["n_rows"]),
-                "files_moved": int(moved),
-                "cells_touched": int(staged_fp.get("n_cells", 0)),
-                "recovered_moves": 0, "retried_same_batch": True}
-    if _ids_match_content_differs(staged_fp, incoming_fp):
-        fs, tjp, _ = _hadoop_fs(spark, tmp_dir)
-        fs.delete(tjp, True)
-        recovered = 0
-    else:
-        recovered = _publish_staged_cells(spark, path, cells_dir,
-                                          tmp_dir)
-    # fully-published retry: a crash between the stage-dir delete and
-    # the caller recording success leaves NO stage, but the durable
-    # last-append fingerprint identifies the batch as already indexed —
-    # short-circuit instead of indexing every vector twice. (Callers
-    # own id uniqueness across appends, so an identical re-append is
-    # never a legitimate new batch.)
-    last_raw = _read_small_file(spark, f"{path}/{_LAST_APPEND_NAME}")
-    if last_raw is not None:
-        last_fp = _json.loads(last_raw)
-        if _fp_matches(last_fp, incoming_fp):
-            return {"appended_rows": int(last_fp["n_rows"]),
-                    "files_moved": 0,
-                    "cells_touched": int(last_fp.get("n_cells", 0)),
-                    "recovered_moves": int(recovered),
-                    "already_published": True}
+                          fail_before_publish) -> dict:
+    stale, collected, live = _index_cleanup(spark, path)
+    summary = {"appended_rows": 0, "files_moved": 0, "cells_touched": 0,
+               "stale_groups_cleaned": stale,
+               "superseded_groups_cleaned": collected}
+    fp = _batch_fingerprint(new_corpus, id_col, vec_col)
+    for rows in live.values():
+        for r in rows:
+            if r.get("fingerprint") == fp:
+                return {**summary, "appended_rows": int(r["n_rows"]),
+                        "cells_touched": int(r["n_cells"]),
+                        "already_published": True}
     C = read_ivf_centroids(spark, path)
     codebooks = read_pq_codebooks(spark, path)
     if dim != C.shape[1]:
         raise ValueError(
             f"dim {dim} does not match the index's centroid width "
             f"{C.shape[1]}")
-    live = spark.read.parquet(cells_dir)
-    live_types = dict(live.dtypes)
-    unit_dtype = ("float32" if live_types["unit"] == "array<float>"
-                  else "float64")
+    meta = {k: next(iter(live.values()))[0][k] for k in _META_KEYS}
     id_type = new_corpus.schema[id_col].dataType.simpleString()
-    if live_types[id_col] != id_type:
+    if (meta["id_col"], meta["id_type"]) != (id_col, id_type):
         raise ValueError(
             f"id column {id_col!r} is {id_type} in the new corpus but "
-            f"{live_types[id_col]} in the index")
+            f"the index holds {meta['id_col']!r} {meta['id_type']}")
     units = with_unit_vectors(
         new_corpus.withColumn(vec_col, _require_vector(vec_col)), vec_col
     ).select(F.col(id_col), F.col("unit"))
     drift = _drift_canary(spark, path, units, C, id_col)
-    encoded = _pq_encoded_frame(units, C, codebooks, dim, unit_dtype,
-                                id_col, id_type)
-    (encoded.repartition(F.col("cell"))
-     .write.mode("overwrite").partitionBy("cell").parquet(tmp_dir))
-    fs, tjp, _ = _hadoop_fs(spark, tmp_dir)
-    has_cells = any(st.getPath().getName().startswith("cell=")
-                    for st in fs.listStatus(tjp))
-    if has_cells:
-        staged = spark.read.parquet(tmp_dir)
-        n_rows = staged.count()
-        n_cells = staged.select("cell").distinct().count()
-    else:  # empty input batch: nothing staged beyond _SUCCESS
-        n_rows = n_cells = 0
-    # fingerprint LAST: its presence is what marks the stage complete
-    # (a stage with _SUCCESS but no fingerprint is discarded as torn),
-    # so the same-batch-retry check above can trust what it reads
-    _write_small_file(spark, f"{tmp_dir}/{_STAGE_FP_NAME}",
-                      _json.dumps({**incoming_fp, "n_cells": int(n_cells)}))
-    moved = _publish_staged_cells(spark, path, cells_dir, tmp_dir,
-                                  fail_after_moves)
-    summary = {"appended_rows": int(n_rows), "files_moved": int(moved),
-               "cells_touched": int(n_cells),
-               "recovered_moves": int(recovered)}
+    encoded = _pq_encoded_frame(units, C, codebooks, dim,
+                                meta["unit_dtype"], id_col, id_type)
+    gid = storage.max_group_id(spark, path) + 1
+    _write_cell_group(encoded.repartition(F.col("cell")), path, gid,
+                      "append")
+    n_rows, n_cells, n_files = _group_stats(spark, path, gid)
+    if n_rows:  # an empty batch writes no files and publishes nothing
+        if fail_before_publish:
+            raise RuntimeError(
+                "injected failure before the index append's publish")
+        storage.publish_group(spark, path, gid, [
+            {**meta, "n_rows": n_rows, "n_cells": n_cells,
+             "n_files": n_files, "fingerprint": fp}])
+    summary.update(appended_rows=n_rows, files_moved=n_files,
+                   cells_touched=n_cells)
     if drift is not None:
         summary.update(drift)
     return summary
 
 
-_CELL_SWAP_NAME = "_CELL_SWAP.json"
-_CELL_TMP = "cells_compact_tmp"
-_CELL_OLD = "cells_compact_old"
-
-
 def _cell_content_stats(df: DataFrame, id_col: str) -> dict:
     """Per-cell (row count, content-hash sum) over an index frame —
-    the read-back check a cell rewrite must reproduce EXACTLY before
-    its swap publishes. The hash binds id, PQ code, and refine vector,
+    the read-back check a compaction's rewrite must reproduce EXACTLY
+    before its publish. The hash binds id, PQ code, and refine vector,
     so a rewrite that drops, duplicates, or corrupts any row (or
     up/down-casts the refine width) fails the compare."""
     rows = df.groupBy("cell").agg(
@@ -1189,236 +1150,104 @@ def _cell_content_stats(df: DataFrame, id_col: str) -> dict:
     return {int(r["cell"]): (int(r["n"]), int(r["h"] or 0)) for r in rows}
 
 
-def _recover_cell_swap(spark, path: str) -> int:
-    """Roll forward (or discard) whatever a crashed
-    `compact_ivf_pq_cells` left behind; returns the number of cell
-    swaps finished. The journal at ``path/_CELL_SWAP.json`` is the
-    commit point — it is written only AFTER the staged rewrite passed
-    its read-back verify, so every journaled cell's staged dir is known
-    good and recovery always rolls FORWARD:
-
-    - no journal: any staging/old leftovers are pre-commit garbage
-      (crash before or during the verified stage) — deleted.
-    - journal present, per cell j: staged dir still present means the
-      swap for j did not finish — if the live ``cell=j`` was already
-      moved out, the staged dir is renamed in (finishing the crashed
-      swap); if the live dir is still in place, the pending pair is
-      completed here under the caller's lock. Staged dir absent means
-      j's swap completed; only its old copy remains to drop.
-
-    Callers hold the job lock (`append_ivf_pq_index` and
-    `compact_ivf_pq_cells` both run this on entry)."""
-    import json as _json
-
-    from ..plans.pipeline import _hadoop_fs, _read_small_file
-
-    fs, _, jvm = _hadoop_fs(spark, path)
-    Path = jvm.org.apache.hadoop.fs.Path
-    tmp_root, old_root = Path(path, _CELL_TMP), Path(path, _CELL_OLD)
-    journal = _read_small_file(spark, f"{path}/{_CELL_SWAP_NAME}")
-    if journal is None:
-        # pre-commit crash: the staging was never verified+journaled
-        for p in (tmp_root, old_root):
-            if fs.exists(p):
-                fs.delete(p, True)
-        return 0
-    finished = 0
-    cells_dir = Path(path, "cells")
-    for j in _json.loads(journal)["cells"]:
-        live = Path(cells_dir, f"cell={j}")
-        staged = Path(tmp_root, f"cell={j}")
-        old = Path(old_root, f"cell={j}")
-        if not fs.exists(staged):
-            continue  # swap for j completed before the crash
-        if fs.exists(live):
-            # crash before this cell's swap started: finish the pair
-            fs.mkdirs(old_root)
-            if fs.exists(old):  # stray copy from a doomed earlier try
-                fs.delete(old, True)
-            if not fs.rename(live, old):
-                raise IOError(f"cell-swap recovery: could not move the "
-                              f"live cell={j} aside")
-        if not fs.rename(staged, live):
-            raise IOError(f"cell-swap recovery: could not publish the "
-                          f"staged cell={j}")
-        finished += 1
-    for p in (old_root, tmp_root):
-        if fs.exists(p):
-            fs.delete(p, True)
-    fs.delete(Path(path, _CELL_SWAP_NAME), False)
-    return finished
-
-
-def _maybe_recover_cell_swap(spark, path: str,
-                             lock_lease_sec: float = 60.0) -> int:
-    """Reader-side bound on the crashed-compaction window (round-9
-    ADVICE): when the swap journal exists, acquire the single-writer
-    lock and roll the journaled swaps forward (idempotent — the same
-    recovery append/compact run on entry). When the lock is held, a
-    LIVE writer owns the swap and finishes it itself — return without
-    recovering. No journal (the overwhelmingly common case) costs one
-    FS existence probe."""
-    from ..plans.pipeline import _JobLock, _hadoop_fs
-
-    fs, _, jvm = _hadoop_fs(spark, path)
-    Path = jvm.org.apache.hadoop.fs.Path
-    if not fs.exists(Path(path, _CELL_SWAP_NAME)):
-        return 0
-    try:
-        lock = _JobLock(spark, path, lease_sec=lock_lease_sec).acquire()
-    except Exception:
-        return 0  # live writer mid-swap; it completes the publish
-    try:
-        return _recover_cell_swap(spark, path)
-    finally:
-        lock.release()
-
-
 def compact_ivf_pq_cells(spark, path: str,
                          max_files_per_cell: int = 1,
                          target_file_bytes: int = 128 << 20,
-                         fail_after_swaps: int | None = None,
-                         fail_mid_swap: bool = False,
+                         gc_min_age_sec: float = 0.0,
+                         fail_before: str | None = None,
                          lock_lease_sec: float = 60.0) -> dict:
-    """Rewrite IVF-PQ cell dirs that have accreted too many files — the
-    maintenance half of `append_ivf_pq_index` (round-7 judge ask #2):
-    every append moves ~n_cells files into the live ``cell=<j>/`` dirs,
-    so K appends leave K files per cell and the query path's probed
-    scan pays K file opens per probed cell. Cells holding more than
-    ``max_files_per_cell`` data files are rewritten into
-    ``ceil(cell_bytes / target_file_bytes)`` files each (one shuffle,
-    hash-sliced inside big cells so no output file outgrows the
-    target), read-back verified per cell — (row count, content hash
-    over id+pq_code+unit) must match the live cell EXACTLY — and then
-    published by per-cell ATOMIC dir renames under the same job lock
-    every other writer holds.
+    """Merge the index's live groups into one — the maintenance half of
+    `append_ivf_pq_index`: every append adds ~1 file per touched cell,
+    so K appends leave K files per cell and the query's probed scan
+    pays K file opens per probed cell. Once any cell holds more than
+    ``max_files_per_cell`` live data files, ALL live groups are
+    rewritten into one new group of ``ceil(cell_bytes /
+    target_file_bytes)`` files per cell (one shuffle, hash-sliced
+    inside big cells so no output file outgrows the target). On the
+    measured traffic every cell had accreted files, so selecting
+    cells would save nothing.
 
-    Crash safety mirrors the encode pipeline's supersedes protocol:
-    the journal (``_CELL_SWAP.json``) is written only after the verify
-    passes, making it the commit point; `_recover_cell_swap` (run on
-    entry here AND by `append_ivf_pq_index`) rolls a crashed swap
-    forward from the journal, and discards unjournaled staging as
-    torn. A reader that lists partitions in the instant between one
-    cell's two renames misses that single cell (never sees duplicate
-    rows); a crash inside the window persists that state only until
-    the next maintenance or append job recovers it — acceptable for
-    ANN search and called out here, same as the append's mid-publish
-    subset visibility. A reader that LISTED files before the swap and
-    opens them after gets FileNotFound for the moved files (renames,
-    not copies; the encode pipeline's manifest-driven snapshot reads
-    don't apply because `ivf_pq_query` reads the cells dir directly) —
-    run compaction in a maintenance window, or tolerate a query retry,
-    where that matters.
+    The encode pipeline's compaction protocol, shared through
+    `storage`: the new group is written unpublished, read-back verified
+    per cell — (row count, content hash over id+pq_code+unit) must
+    match the live groups EXACTLY — then ONE manifest rename publishes
+    it with ``supersedes`` = the merged groups and their batch rows
+    (fingerprints included). The shared GC pass then deletes the
+    superseded files, once the publish is older than
+    ``gc_min_age_sec``. That retention is stamped in the new manifest,
+    so it holds against every later writer's GC pass too: a reader
+    that resolved its snapshot before the publish keeps scanning the
+    old files until it expires. A crash before the publish leaves an
+    orphan group; a crash before the GC leaves superseded files
+    readers no longer resolve; the next writer's cleanup removes
+    either. ``fail_before`` (tests only) is ``"publish"`` or ``"gc"``.
 
     Returns ``{"cells_compacted", "files_before", "files_after",
-    "recovered_swaps"}``."""
-    import json as _json
-
-    from ..plans.pipeline import (_JobLock, _hadoop_fs,
-                                  _write_small_file)
-
-    lock = _JobLock(spark, path, lease_sec=lock_lease_sec).acquire()
-    ok = False
-    try:
-        recovered = _recover_cell_swap(spark, path)
-        cells_dir = f"{path}/cells"
-        fs, cjp, jvm = _hadoop_fs(spark, cells_dir)
-        Path = jvm.org.apache.hadoop.fs.Path
-        sizes: dict[int, tuple[int, int]] = {}  # cell -> (files, bytes)
-        for st in fs.listStatus(cjp):
-            name = st.getPath().getName()
-            if not name.startswith("cell="):
-                continue
-            n_files = n_bytes = 0
-            for f in fs.listStatus(st.getPath()):
-                fname = f.getPath().getName()
-                if fname.startswith(("_", ".")):
-                    continue
-                n_files += 1
-                n_bytes += f.getLen()
-            sizes[int(name[5:])] = (n_files, n_bytes)
-        picked = sorted(j for j, (nf, _) in sizes.items()
-                        if nf > max_files_per_cell)
-        summary = {"cells_compacted": 0,
-                   "files_before": sum(nf for nf, _ in sizes.values()),
-                   "files_after": sum(nf for nf, _ in sizes.values()),
-                   "recovered_swaps": int(recovered)}
-        if not picked:
-            ok = True
+    "stale_groups_cleaned", "superseded_groups_cleaned"}``; the file
+    counts are of live groups."""
+    with storage.JobLock(spark, path, lease_sec=lock_lease_sec):
+        stale, collected, live = _index_cleanup(spark, path)
+        gids = sorted(live)
+        sizes: dict[int, list[int]] = {}  # cell -> [files, bytes]
+        files = _group_files(spark, path, gids)
+        for st in files:
+            cell = int(st.getPath().getParent().getParent().getName()[5:])
+            sizes.setdefault(cell, [0, 0])
+            sizes[cell][0] += 1
+            sizes[cell][1] += st.getLen()
+        summary = {"cells_compacted": 0, "files_before": len(files),
+                   "files_after": len(files),
+                   "stale_groups_cleaned": stale,
+                   "superseded_groups_cleaned": collected}
+        if not sizes or max(nf for nf, _ in sizes.values()) \
+                <= max_files_per_cell:
             return summary
-        live = spark.read.parquet(cells_dir).filter(
-            F.col("cell").isin(picked))
-        id_col = next(c for c in live.columns
-                      if c not in ("pq_code", "cell", "unit"))
+        cells = _live_cells(spark, path, live)
+        id_col = live[gids[0]][0]["id_col"]
         # slice big cells so no output file outgrows the target: the
         # slice count rides a broadcast join (scales to any n_cells,
         # unlike a literal CASE chain) and feeds the repartition key
-        n_slices = {j: max(1, -(-sizes[j][1] // target_file_bytes))
-                    for j in picked}
+        n_slices = {j: max(1, -(-nb // target_file_bytes))
+                    for j, (_, nb) in sizes.items()}
         slices = spark.createDataFrame(
             sorted(n_slices.items()), "cell int, n_slices int")
-        tmp_root = f"{path}/{_CELL_TMP}"
         # explicit partition count: an unnumbered keyed repartition is
         # AQE-coalescible, which would merge every slice of a cell into
         # one output file and defeat the target_file_bytes bound; 2x
         # the slice count keeps (cell, slice) hash collisions rare so
         # files/cell tracks n_slices
         n_parts = max(2, 2 * sum(n_slices.values()))
-        (live.join(F.broadcast(slices), "cell")
-         .repartition(n_parts, F.col("cell"),
-                      F.pmod(F.xxhash64(F.col(id_col)),
-                             F.col("n_slices")))
-         .drop("n_slices")
-         .write.mode("overwrite").partitionBy("cell").parquet(tmp_root))
-        want = _cell_content_stats(live, id_col)
-        got = _cell_content_stats(spark.read.parquet(tmp_root), id_col)
+        gid = storage.max_group_id(spark, path) + 1
+        _write_cell_group(
+            cells.join(F.broadcast(slices), "cell")
+            .repartition(n_parts, F.col("cell"),
+                         F.pmod(F.xxhash64(F.col(id_col)),
+                                F.col("n_slices")))
+            .drop("n_slices"), path, gid, "append")
+        want = _cell_content_stats(cells, id_col)
+        got = _cell_content_stats(_cells_of(spark, path, [gid]), id_col)
         if want != got:
-            fs.delete(Path(path, _CELL_TMP), True)
             bad = sorted(set(want) ^ set(got)
                          | {j for j in set(want) & set(got)
                             if want[j] != got[j]})
             raise RuntimeError(
                 f"cell compaction read-back mismatch for cells {bad}; "
-                "staging discarded, live index untouched")
-        # commit point: journal AFTER the verify, swaps roll forward
-        _write_small_file(spark, f"{path}/{_CELL_SWAP_NAME}",
-                          _json.dumps({"cells": picked}))
-        old_root = Path(path, _CELL_OLD)
-        fs.mkdirs(old_root)
-        swapped = 0
-        for j in picked:
-            if fail_after_swaps is not None and \
-                    swapped >= fail_after_swaps:
-                raise RuntimeError(
-                    "injected failure between cell swaps")
-            livep = Path(cells_dir, f"cell={j}")
-            if not fs.rename(livep, Path(old_root, f"cell={j}")):
-                raise IOError(f"cell compaction: could not move the "
-                              f"live cell={j} aside")
-            if fail_mid_swap:
-                raise RuntimeError(
-                    "injected failure mid-swap (live cell moved out, "
-                    "staged cell not yet in)")
-            if not fs.rename(Path(tmp_root, f"cell={j}"), livep):
-                raise IOError(f"cell compaction: could not publish "
-                              f"the staged cell={j}")
-            swapped += 1
-        fs.delete(old_root, True)
-        fs.delete(Path(path, _CELL_TMP), True)
-        fs.delete(Path(path, _CELL_SWAP_NAME), False)
-        after_picked = 0
-        for j in picked:
-            for f in fs.listStatus(Path(cells_dir, f"cell={j}")):
-                if not f.getPath().getName().startswith(("_", ".")):
-                    after_picked += 1
-        summary["cells_compacted"] = len(picked)
-        summary["files_after"] = (
-            summary["files_before"]
-            - sum(sizes[j][0] for j in picked) + after_picked)
-        ok = True
+                f"the unpublished group {gid} is left for the next "
+                "writer's cleanup, live index untouched")
+        if fail_before == "publish":
+            raise RuntimeError(
+                "injected failure before the cell compaction's publish")
+        storage.publish_group(spark, path, gid,
+                              [r for g in gids for r in live[g]],
+                              supersedes=gids, retain_sec=gc_min_age_sec)
+        if fail_before == "gc":
+            raise RuntimeError(
+                "injected failure before the cell compaction's GC")
+        summary["superseded_groups_cleaned"] += storage.collect_garbage(
+            spark, path, lambda: _group_dirs(spark, path))[1]
+        summary["cells_compacted"] = len(sizes)
+        summary["files_after"] = len(_group_files(spark, path, [gid]))
         return summary
-    finally:
-        lock.release(raise_on_stolen=ok)
 
 
 def read_pq_codebooks(spark, path: str) -> np.ndarray:
@@ -1450,21 +1279,23 @@ def ivf_pq_query(queries: DataFrame, dim: int,
     the query lineage. Duplicate query ids are rejected loudly (their
     top-k would be degenerate).
 
-    Probed `cell=<j>/` partitions are
-    read PRUNED and COLUMN-PRUNED to (id, pq_code) — m bytes/row, not
-    8*dim — candidates are scored in the quantized domain with Jegou et
-    al.'s ADC LOOKUP TABLES (round 6): per (query, subspace) the dots
-    against all 256 sub-codebook entries are precomputed once
-    driver-side, so each candidate costs m table adds instead of a dim-
-    length reconstruction+dot, and the bucket join carries only
-    (query_id, cell) — not the 8*dim-byte query vector per candidate
-    row. The per-query top refine*k survivors are re-scored EXACTLY
-    against the index's own stored unit vectors, read from the SAME
-    probed cells (partition filter on cell + column-pruned to (id,
+    The index rows are the live groups of ONE manifest snapshot
+    (`read_ivf_pq_cells`); the query never writes or locks, so it
+    neither waits for nor repairs a writer. Probed `cell=<j>/`
+    partitions are read PRUNED and COLUMN-PRUNED to (id, pq_code) — m
+    bytes/row, not 8*dim — candidates are scored in the quantized domain
+    with Jegou et al.'s ADC LOOKUP TABLES (round 6): per (query,
+    subspace) the dots against all 256 sub-codebook entries are
+    precomputed once driver-side, so each candidate costs m table adds
+    instead of a dim-length reconstruction+dot, and the bucket join
+    carries only (query_id, cell) — not the 8*dim-byte query vector per
+    candidate row. The per-query top refine*k survivors are re-scored
+    EXACTLY against the index's own stored unit vectors, read from the
+    SAME probed cells (partition filter on cell + column-pruned to (id,
     unit): candidates live in probed cells by construction, so the
     refine stage never touches the rest of the corpus — the round-5
-    judge's one unbounded scan, closed). The final top-k is
-    exact-cosine ranked; returned cosines are exact.
+    judge's one unbounded scan, closed). The final top-k is exact-cosine
+    ranked; returned cosines are exact.
 
     Driver-bounded artifacts (the query batch is model-artifact-sized
     by contract, like the probed-cell set): the collected query units
@@ -1511,23 +1342,14 @@ def ivf_pq_query(queries: DataFrame, dim: int,
     m, n_codes, dsub = codebooks.shape
     cnorm_half = (C * C).sum(axis=1) / 2.0
     # ONE cells relation shared by every slice's candidate and refine
-    # scans: the parquet file listing is computed once per DataFrame, so
-    # per-slice re-listing of path/cells is gone; each branch still
-    # partition-prunes to its probed cells and column-prunes to its own
-    # columns. The stored refine floats may be float32 (write-side
-    # unit_dtype) — up-cast AFTER the scan so the refine dot runs in
-    # float64 while the scan pays only 4*dim bytes/row.
-    # Bound the crashed-compaction window (round-9 ADVICE, medium): a
-    # compactor that died mid-swap leaves a journaled, verified staged
-    # cell with the live dir moved aside; previously only the NEXT
-    # append/compact job rolled it forward, so a read-mostly deployment
-    # could silently miss that cell's vectors indefinitely. The query
-    # path now checks for the swap journal (one cheap existence probe)
-    # and, when present, takes the writer lock and runs the idempotent
-    # roll-forward itself; if the lock is live, an active writer owns
-    # the swap and will finish it — proceed as before.
-    _maybe_recover_cell_swap(spark, path)
-    cells_src = spark.read.parquet(f"{path}/cells")
+    # scans, over the live groups of one manifest snapshot: the parquet
+    # file listing is computed once per DataFrame, so per-slice
+    # re-listing is gone; each branch still partition-prunes to its
+    # probed cells and column-prunes to its own columns. The stored
+    # refine floats may be float32 (write-side unit_dtype) — up-cast
+    # AFTER the scan so the refine dot runs in float64 while the scan
+    # pays only 4*dim bytes/row.
+    cells_src = read_ivf_pq_cells(spark, path)
     if dict(cells_src.dtypes)["unit"] == "array<float>":
         refine_src = cells_src.withColumn(
             "unit", F.col("unit").cast("array<double>"))

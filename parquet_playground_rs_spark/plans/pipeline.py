@@ -25,6 +25,10 @@ the one encode pipeline):
 - Reads are manifest-driven (`read_encoded`): only the commit dirs of
   valid, non-superseded groups are scanned.
 
+The lock, the manifest log and its garbage collection are the shared
+protocol of `parquet_playground_rs_spark.storage`; this module supplies
+the commit-dir layout and the bucket lineage rows.
+
 At cluster scale each commit group is one static overwrite of its own
 commit dir; groups are the engine's unit of progress and audit, mirroring
 what Iceberg snapshots would give (the engine ships without Iceberg
@@ -37,11 +41,13 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import storage
 from ..operators import decode as dec
 from ..operators import encode as enc
+from ..storage import JobLock, hadoop_fs, read_small_file, write_small_file
 
 MANIFEST_SCHEMA = (
     "bucket int, status string, n_rows bigint, n_docs bigint, "
@@ -49,328 +55,40 @@ MANIFEST_SCHEMA = (
     "block_crc bigint, wall_sec double, ts double, files string, "
     "group_size int, supersedes string"
 )
-_MANIFEST_COLS = [p.split(" ")[0] for p in MANIFEST_SCHEMA.split(", ")]
+_MANIFEST_TYPES = dict(p.split(" ") for p in MANIFEST_SCHEMA.split(", "))
 
 
-def _manifest_dir(out: str) -> str:
-    return os.path.join(out, "manifest")
-
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    """Hadoop FileSystem for `path` — same code serves file://, hdfs://,
-    s3a:// (the manifest protocol must not assume a driver-local disk at
-    cluster scale)."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath, jvm
-
-
-def _read_manifest_flagged(spark: SparkSession, out: str) -> DataFrame | None:
-    """Manifest rows tagged with per-FILE validity (None if no manifest
-    dir yet). A manifest file is valid iff every line parses (no
-    corrupt-record, bucket present), every line carries group_size, and
-    group_size equals the file's line count."""
-    mdir = _manifest_dir(out)
-    fs, jpath, _ = _hadoop_fs(spark, mdir)
-    if not fs.exists(jpath):
-        return None
-    raw = (
-        spark.read.schema(MANIFEST_SCHEMA + ", _corrupt string")
-        .option("columnNameOfCorruptRecord", "_corrupt")
-        .option("pathGlobFilter", "*.json")
-        .json(mdir)
-        .withColumn("_mf", F.input_file_name())
-    )
-    w = Window.partitionBy("_mf")
-    bad = (F.col("_corrupt").isNotNull()
-           | F.col("bucket").isNull()).cast("int")
-    flagged = (
-        raw.withColumn("_n", F.count(F.lit(1)).over(w))
-        .withColumn("_nbad", F.sum(bad).over(w))
-        .withColumn("_ng", F.count("group_size").over(w))
-        .withColumn("_gmin", F.min("group_size").over(w))
-        .withColumn("_gmax", F.max("group_size").over(w))
-    )
-    valid = ((F.col("_nbad") == 0)
-             & (F.col("_ng") == F.col("_n"))
-             & (F.col("_gmin") == F.col("_n"))
-             & (F.col("_gmax") == F.col("_n")))
-    return flagged.withColumn("_file_valid", valid)
+def _manifest_rows(spark: SparkSession, out: str) -> list[dict]:
+    """Bucket rows of every validly published group, superseded ones
+    included (see `storage.read_groups` for the validity rule)."""
+    return [r for rows in storage.read_groups(spark, out).values()
+            for r in rows]
 
 
 def read_manifest(spark: SparkSession, out: str) -> DataFrame:
-    """Manifest rows from VALID manifest files only.
+    """Manifest rows of VALID group manifest files only, as a frame.
 
-    Group manifests are self-validating (round-6 ADVICE high, hardened
-    round 7): every row carries group_size = the number of rows the
-    committing writer put in the file, so a PARTIAL group file — the
-    S3A crash-mid-rename window, where rename = copy+delete can leave
-    a prefix of the file — fails the count (or has a torn, unparseable
-    last line) and ALL of its buckets read as pending instead of some
-    reading committed. `_clean_stale_commit_dirs` applies the same
-    validity rule, deleting both the partial file and its commit dir."""
-    flagged = _read_manifest_flagged(spark, out)
-    if flagged is None:
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
-    return flagged.filter(F.col("_file_valid")).select(*_MANIFEST_COLS)
+    Group manifests are self-validating: every row carries group_size =
+    the number of rows the committing writer put in the file, so a
+    PARTIAL group file — the S3A crash-mid-rename window, where rename =
+    copy+delete can leave a prefix of the file — fails the count (or has
+    a torn, unparseable last line) and ALL of its buckets read as
+    pending instead of some reading committed. `_collect_garbage`
+    applies the same rule, deleting both the partial file and its
+    commit dir."""
+    def cast(name, v):
+        if v is None or _MANIFEST_TYPES[name] == "string":
+            return v
+        return float(v) if _MANIFEST_TYPES[name] == "double" else int(v)
+
+    return spark.createDataFrame(
+        [tuple(cast(c, r.get(c)) for c in _MANIFEST_TYPES)
+         for r in _manifest_rows(spark, out)], MANIFEST_SCHEMA)
 
 
 def completed_buckets(spark: SparkSession, out: str) -> set[int]:
-    m = read_manifest(spark, out)
-    return {r["bucket"] for r in m.filter(F.col("status") == "done").collect()}
-
-
-def _write_small_file(spark: SparkSession, path: str, payload: str) -> None:
-    """tmp-write + rename of one small control file (same FS protocol as
-    the manifest rows)."""
-    fs, jpath, jvm = _hadoop_fs(spark, path)
-    try:
-        fs.setWriteChecksum(False)
-    except Exception:
-        pass
-    Path = jvm.org.apache.hadoop.fs.Path
-    tmp = Path(path + ".tmp")
-    stream = fs.create(tmp, True)
-    try:
-        stream.write(bytearray(payload.encode("utf-8")))
-    finally:
-        stream.close()
-    if fs.exists(jpath):
-        fs.delete(jpath, False)
-    if not fs.rename(tmp, jpath):
-        raise IOError(f"rename failed for {path}")
-
-
-def _read_small_file(spark: SparkSession, path: str) -> str | None:
-    fs, jpath, jvm = _hadoop_fs(spark, path)
-    if not fs.exists(jpath):
-        return None
-    stream = fs.open(jpath)
-    try:
-        # JVM-side drain: a py4j byte[] argument is passed by VALUE, so
-        # the usual read(buf) loop can't see the bytes — commons-io (on
-        # Spark's classpath) slurps the stream inside the JVM instead
-        return jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8")
-    finally:
-        stream.close()
-
-
-_LOCK_FILE = "job.lock"
-
-
-class _JobLock:
-    """Single-writer lease on an output dir (round-7 judge task 5).
-
-    The catalog fingerprint guards INPUTS; nothing guarded WRITERS — two
-    drivers pointed at one output dir would interleave commit groups
-    undetected (and a restarting peer's `_clean_stale_commit_dirs`
-    would delete the live peer's in-flight commit dirs). The lock file
-    is created atomically (``FileSystem.create(overwrite=false)`` —
-    atomic on local FS and HDFS; S3A needs an external lock service if
-    concurrent drivers are a real possibility there) and carries the
-    owner token, written ONCE; the heartbeat is a metadata-only
-    ``setTimes`` touch every lease/4 s and staleness is read from the
-    file's MODIFICATION TIME. Content is never rewritten while held —
-    a rewrite-based heartbeat (tmp + delete + rename) would open a
-    delete-to-rename window where a probing second writer sees no lock
-    at all, and a torn read of rewritten content would misread a LIVE
-    lock as stale. A second writer finds a fresh-mtime lock and fails
-    loudly; a lock whose mtime is older than the lease is a crashed
-    writer's leftover and is broken. In-process failures (including
-    the injected test crashes) release the lock via the run's
-    ``finally``, so resume is immediate on the common path.
-
-    Round 8 (round-7 ADVICE, both mediums): breaking a stale lock is no
-    longer exists/delete/create — two successors arriving after lease
-    expiry could both judge the lock stale, and the slower one's delete
-    removed the faster one's FRESH lock, so both acquired. The break is
-    now an atomic RENAME of the stale file to a breaker-unique name:
-    only one breaker's rename can succeed, and the winner re-reads the
-    renamed file to confirm it moved the lock it OBSERVED as stale (by
-    token) — if a faster breaker already replaced it, the rename moved
-    a live lock, which is restored and the acquisition refused. After
-    create + token write the owner re-reads the file and verifies its
-    own token before returning. The heartbeat retries transient FS
-    errors (it used to die on the FIRST one, silently letting the live
-    lock age past the lease) and on unrecoverable loss — lock file
-    gone, token replaced, or retries exhausted — records the loss in
-    ``lost_reason`` instead of exiting silently; long jobs call
-    ``check()`` between commit groups to abort promptly instead of
-    running unprotected until release()."""
-
-    _BEAT_RETRIES = 3
-
-    def __init__(self, spark: SparkSession, out: str,
-                 lease_sec: float = 60.0):
-        import threading
-
-        self._spark = spark
-        self._path = os.path.join(out, _LOCK_FILE)
-        self._lease = float(lease_sec)
-        self._token = None
-        self._stop = threading.Event()
-        self._thread = None
-        self.lost_reason: str | None = None
-
-    def _read_token(self) -> str | None:
-        held = _read_small_file(self._spark, self._path)
-        if held is None:
-            return None
-        try:
-            return json.loads(held).get("token")
-        except ValueError:
-            return None
-
-    def _break_stale(self, fs, jpath, jvm, observed_token) -> None:
-        """Atomically claim the right to break ONE observed-stale lock:
-        rename it to a breaker-unique name (one rename wins), confirm
-        the moved file is the one observed (token match), then drop it.
-        A mismatch means a faster breaker already broke-and-recreated —
-        the moved file is a LIVE lock: put it back and refuse.
-
-        A breaker crash between the rename and the delete leaves a
-        ``job.lock.stale-<token>`` residue file: uniquely named, never
-        read by any path, harmless — deliberately NOT garbage-collected
-        here, because a cleanup pass would race a concurrent breaker's
-        just-claimed rename (deleting a live lock mid-verification)."""
-        Path = jvm.org.apache.hadoop.fs.Path
-        claimed = Path(f"{self._path}.stale-{self._token}")
-        try:
-            won = fs.rename(jpath, claimed)
-        except Exception:
-            won = False
-        if not won:
-            raise RuntimeError(
-                f"lost the stale-lock break race for {self._path} to a "
-                "concurrent writer; retry after it finishes")
-        moved = _read_small_file(self._spark, str(claimed))
-        moved_token = None
-        if moved is not None:
-            try:
-                moved_token = json.loads(moved).get("token")
-            except ValueError:
-                pass  # unparseable stale leftover: safe to drop
-        if moved is not None and moved_token is not None and \
-                moved_token != observed_token:
-            # a faster breaker already installed a fresh lock and the
-            # rename moved THAT: restore it and back off
-            fs.rename(claimed, jpath)
-            raise RuntimeError(
-                f"lost the stale-lock break race for {self._path}: a "
-                "concurrent writer re-acquired it first")
-        fs.delete(claimed, False)
-
-    def acquire(self) -> "_JobLock":
-        import threading
-        import uuid
-
-        self._token = uuid.uuid4().hex
-        self.lost_reason = None
-        fs, jpath, jvm = _hadoop_fs(self._spark, self._path)
-        if fs.exists(jpath):
-            # staleness from the file's mtime (refreshed by the owner's
-            # setTimes heartbeat); the content is only the owner token
-            age = time.time() - \
-                fs.getFileStatus(jpath).getModificationTime() / 1000.0
-            if age < self._lease:
-                raise RuntimeError(
-                    f"another writer holds {self._path} (heartbeat "
-                    f"{age:.1f}s ago, lease {self._lease:.0f}s): "
-                    "refusing to interleave commit groups with a live "
-                    "job. If that writer is dead, wait out the lease or "
-                    "delete the lock file.")
-            self._break_stale(fs, jpath, jvm, self._read_token())
-        try:
-            fs.setWriteChecksum(False)
-        except Exception:
-            pass
-        parent = jvm.org.apache.hadoop.fs.Path(
-            self._path.rsplit("/", 1)[0])
-        fs.mkdirs(parent)
-        try:
-            stream = fs.create(jpath, False)  # atomic create-if-absent
-        except Exception as e:
-            raise RuntimeError(
-                f"could not acquire {self._path} — lost the creation "
-                f"race to a concurrent writer: {e}") from None
-        try:
-            stream.write(bytearray(json.dumps(
-                {"token": self._token, "ts": time.time()}).encode()))
-        finally:
-            stream.close()
-        # verify-before-work: if anything replaced the file between the
-        # create and here (a delete-based breaker from an older build),
-        # refuse now instead of interleaving a whole run
-        if self._read_token() != self._token:
-            raise RuntimeError(
-                f"could not acquire {self._path}: the lock was replaced "
-                "immediately after creation by a concurrent writer")
-        self._stop.clear()
-        self._thread = threading.Thread(
-            target=self._beat, name="job-lock-heartbeat", daemon=True)
-        self._thread.start()
-        return self
-
-    def _beat(self) -> None:
-        while not self._stop.wait(self._lease / 4):
-            failures = 0
-            while not self._stop.is_set():
-                try:
-                    # metadata-only touch: mtime refresh, content
-                    # untouched; re-reading the token each beat catches
-                    # a theft within lease/4 instead of at release()
-                    fs, jpath, _ = _hadoop_fs(self._spark, self._path)
-                    fs.setTimes(jpath, int(time.time() * 1000), -1)
-                    if self._read_token() != self._token:
-                        self.lost_reason = (
-                            "lock token replaced by another writer")
-                        return
-                    break
-                except Exception as e:
-                    # transient FS hiccups must not kill the heartbeat
-                    # (a dead heartbeat lets the LIVE lock age past the
-                    # lease and be legitimately broken mid-run)
-                    failures += 1
-                    try:
-                        fs, jpath, _ = _hadoop_fs(self._spark, self._path)
-                        if not fs.exists(jpath):
-                            self.lost_reason = "lock file vanished"
-                            return
-                    except Exception:
-                        pass
-                    if failures >= self._BEAT_RETRIES:
-                        self.lost_reason = (
-                            f"heartbeat failed {failures}x: {e}")
-                        return
-                    self._stop.wait(min(0.2, self._lease / 16))
-
-    def check(self) -> None:
-        """Abort promptly if the lease protection is gone (heartbeat
-        dead or lock stolen) — called between commit groups so a long
-        run doesn't continue unprotected until release()."""
-        if self.lost_reason is not None:
-            raise RuntimeError(
-                f"job lock {self._path} lost mid-run "
-                f"({self.lost_reason}); aborting before the next commit "
-                "group — another writer may acquire this output dir")
-
-    def release(self, raise_on_stolen: bool = True) -> None:
-        self._stop.set()
-        if self._thread is not None:
-            self._thread.join(timeout=self._lease)
-            self._thread = None
-        token = self._read_token()
-        if token == self._token:
-            fs, jpath, _ = _hadoop_fs(self._spark, self._path)
-            fs.delete(jpath, False)
-        elif raise_on_stolen:
-            # raise only on the success path — never mask the original
-            # failure when releasing inside an exception handler
-            raise RuntimeError(
-                f"job lock {self._path} was stolen or lost mid-run "
-                f"(found token {token!r}); another writer may have "
-                "interleaved commits into this output dir")
+    return {int(r["bucket"]) for r in _manifest_rows(spark, out)
+            if r.get("status") == "done"}
 
 
 def _tally(summary: dict, row: dict) -> None:
@@ -438,7 +156,7 @@ def _list_input_files(spark: SparkSession, input_path: str) -> dict[str, int]:
         by_parent.setdefault(f.rsplit("/", 1)[0], []).append(f)
     sizes: dict[str, int] = {}
     for parent, fl in sorted(by_parent.items()):
-        fs, jp, _ = _hadoop_fs(spark, parent)
+        fs, jp, _ = hadoop_fs(spark, parent)
         listing = {st.getPath().getName(): int(st.getLen())
                    for st in fs.listStatus(jp)}
         for f in fl:
@@ -558,7 +276,7 @@ def read_catalog(spark: SparkSession, out: str) -> list[dict]:
     correctness step — a crash between the checkpoint rename and the
     deletes double-lists but never double-loads)."""
     cdir = _catalog_dir(out)
-    fs, jp, _ = _hadoop_fs(spark, cdir)
+    fs, jp, _ = hadoop_fs(spark, cdir)
     if not fs.exists(jp):
         return []
     ckpt_v = -1
@@ -571,11 +289,11 @@ def read_catalog(spark: SparkSession, out: str) -> list[dict]:
             loose.append((int(name[8:-5]), name))
     vers = []
     if ckpt_v >= 0:
-        ck = json.loads(_read_small_file(
+        ck = json.loads(read_small_file(
             spark, os.path.join(cdir, f"checkpoint-{ckpt_v:05d}.json")))
         vers.extend(ck["versions"])
     vers.extend(
-        json.loads(_read_small_file(spark, os.path.join(cdir, name)))
+        json.loads(read_small_file(spark, os.path.join(cdir, name)))
         for v, name in loose if v > ckpt_v)
     return sorted(vers, key=lambda v: int(v["version"]))
 
@@ -591,12 +309,12 @@ def _checkpoint_catalog_locked(spark: SparkSession, out: str) -> dict:
         return {"checkpointed_versions": 0, "files_removed": 0}
     through = int(vers[-1]["version"])
     cdir = _catalog_dir(out)
-    _write_small_file(
+    write_small_file(
         spark, os.path.join(cdir, f"checkpoint-{through:05d}.json"),
         json.dumps({"through_version": through, "versions": vers}))
     # cleanup AFTER the atomic publish: anything the new checkpoint
     # covers is redundant; a crash mid-delete leaves ignorable files
-    fs, jp, _ = _hadoop_fs(spark, cdir)
+    fs, jp, _ = hadoop_fs(spark, cdir)
     removed = 0
     for st in fs.listStatus(jp):
         name = st.getPath().getName()
@@ -613,19 +331,13 @@ def checkpoint_catalog(spark: SparkSession, out: str,
                        lock_lease_sec: float = 60.0) -> dict:
     """Public entry for catalog checkpoint folding — a maintenance job
     like `vacuum_encoded`, single-writer under the same job lock."""
-    job_lock = _JobLock(spark, out, lock_lease_sec).acquire()
-    ok = False
-    try:
-        summary = _checkpoint_catalog_locked(spark, out)
-        ok = True
-        return summary
-    finally:
-        job_lock.release(raise_on_stolen=ok)
+    with JobLock(spark, out, lock_lease_sec):
+        return _checkpoint_catalog_locked(spark, out)
 
 
 def _write_catalog_version(spark: SparkSession, out: str,
                            ver: dict) -> None:
-    _write_small_file(
+    write_small_file(
         spark,
         os.path.join(_catalog_dir(out),
                      f"version-{int(ver['version']):05d}.json"),
@@ -645,94 +357,6 @@ def _new_catalog_version(version: int, bucket_base: int, n_buckets: int,
     return ver
 
 
-def _manifest_group_name(group_id: int) -> str:
-    return f"group-{group_id:05d}.json"
-
-
-def _write_manifest_group(spark: SparkSession, out: str,
-                          group_id: int, rows: list[dict],
-                          supersedes: list[int] | None = None) -> None:
-    """Atomically commit ALL of a commit group's manifest rows as ONE
-    file (tmp-write + rename): a group is either fully manifested or
-    not at all — there is no window where some of its buckets read as
-    done while others re-enter pending, which is what made file-scope
-    commits non-idempotent across resume regrouping (round-6 ADVICE
-    high: a crash between a group's data write and its last per-bucket
-    manifest row left a half-manifested commit dir that a regrouped
-    resume would never clean, double-counting its buckets).
-
-    Round 7 (round-6 ADVICE low): every row carries
-    ``group_size = len(rows)``, making the file SELF-VALIDATING — on a
-    store whose rename is copy+delete (S3A) a crash mid-rename can
-    leave a partial file, and a partial that still parses would
-    otherwise read as a committed group missing some buckets. Readers
-    (`read_manifest`, `_clean_stale_commit_dirs`) count the rows
-    against group_size and treat any shortfall as UNCOMMITTED.
-
-    `supersedes` (compaction) stamps every row with the JSON list of
-    group ids this group REPLACES: the single rename that publishes
-    this file atomically flips readers from the old groups' data dirs
-    to the new one (`read_encoded` drops superseded groups), making
-    the old (manifest, dir) pairs garbage to be collected later — the
-    multi-file swap needs no journal because the supersedes list IS
-    the roll-forward record."""
-    mdir = _manifest_dir(out)
-    fs, mpath, jvm = _hadoop_fs(spark, mdir)
-    try:
-        fs.setWriteChecksum(False)
-    except Exception:
-        pass
-    fs.mkdirs(mpath)
-    Path = jvm.org.apache.hadoop.fs.Path
-    name = _manifest_group_name(group_id)
-    final = Path(mdir, name)
-    tmp = Path(mdir, name + ".tmp")
-    extra = {"group_size": len(rows)}
-    if supersedes:
-        extra["supersedes"] = json.dumps(sorted(int(g) for g in supersedes))
-    payload = "".join(
-        json.dumps({**r, **extra}) + "\n" for r in rows)
-    stream = fs.create(tmp, True)
-    try:
-        stream.write(bytearray(payload.encode("utf-8")))
-    finally:
-        stream.close()
-    if fs.exists(final):
-        fs.delete(final, False)
-    if not fs.rename(tmp, final):
-        raise IOError(f"manifest rename failed for commit group {group_id}")
-
-
-def _valid_group_manifests(spark: SparkSession,
-                           out: str) -> dict[int, list[dict]]:
-    """{group_id: manifest rows} for every VALID ``group-<g>.json``
-    (validity per `_read_manifest_flagged`'s group_size rule)."""
-    flagged = _read_manifest_flagged(spark, out)
-    if flagged is None:
-        return {}
-    groups: dict[int, list[dict]] = {}
-    for r in (flagged.filter(F.col("_file_valid"))
-              .select(*_MANIFEST_COLS, "_mf").collect()):
-        name = r["_mf"].rsplit("/", 1)[-1]
-        if name.startswith("group-") and name.endswith(".json"):
-            groups.setdefault(int(name[6:-5]), []).append(r.asDict())
-    return groups
-
-
-def _live_group_ids(groups: dict[int, list[dict]]) -> set[int]:
-    """Group ids whose data is CURRENT: every valid group minus any
-    group listed in some valid group's ``supersedes`` — including lists
-    carried by groups that are themselves superseded, so a chain
-    g1 <- g' <- g'' resolves to {g''} even while the middle link's
-    garbage is still awaiting collection."""
-    superseded: set[int] = set()
-    for rows in groups.values():
-        for r in rows:
-            if r.get("supersedes"):
-                superseded.update(int(g) for g in json.loads(r["supersedes"]))
-    return set(groups) - superseded
-
-
 def _max_allocated_id(spark: SparkSession, out: str,
                       versions: list[dict]) -> int:
     """Highest id ever allocated in `out`'s shared bucket/group id
@@ -743,91 +367,25 @@ def _max_allocated_id(spark: SparkSession, out: str,
     first bucket, so a compacted group's id must never be re-issued to
     a future append bucket (the manifest/dir names would collide)."""
     hi = max((max(_version_buckets(v)) for v in versions), default=-1)
-    mdir = _manifest_dir(out)
-    fs, jp, _ = _hadoop_fs(spark, mdir)
-    if fs.exists(jp):
-        for st in fs.listStatus(jp):
-            name = st.getPath().getName()
-            if name.startswith("group-") and name.endswith(".json"):
-                try:
-                    hi = max(hi, int(name[6:-5]))
-                except ValueError:
-                    pass
-    return hi
+    return max(hi, storage.max_group_id(spark, out))
 
 
-def _clean_stale_commit_dirs(spark: SparkSession, out: str,
-                             min_age_sec: float = 0.0) -> tuple[int, int]:
-    """Delete any ``out/data/commit=<g>/`` dir whose group manifest file
-    is absent OR INVALID (partial/torn — see `_read_manifest_flagged`'s
-    group_size rule): its data write started (possibly finished) but the
-    group never fully committed, so every one of its buckets is still
-    pending and will be re-encoded — under a possibly DIFFERENT grouping
-    — into a fresh commit dir. An invalid manifest file is deleted along
-    with its dir (both halves of the failed commit go). Leaving the
-    orphan would double-count those buckets in read_encoded/verify. Runs
-    before any group processing on every (re)start; returns the number
-    of dirs removed.
+def _commit_dir(out: str, group_id: int) -> str:
+    return os.path.join(out, "data", f"commit={group_id:05d}")
+
+
+def _commit_dirs(spark: SparkSession, out: str) -> dict[int, list[str]]:
+    """{group_id: [its commit dir]} for every ``out/data/commit=<g>/``.
 
     A ``commit=`` entry whose suffix is not an integer was not written
     by this pipeline — that's a foreign layout sharing the output dir,
     and silently deleting it would destroy someone else's data: fail
-    loudly instead (round-6 ADVICE low).
-
-    Second pass (compaction GC roll-forward): any valid group that is
-    SUPERSEDED by another valid group's manifest had its data replaced
-    by a published compaction — its manifest and dir are garbage that a
-    crash between compaction's publish and its GC may have left behind
-    (or that ``compact_encoded_job(gc=False)`` deferred on purpose).
-    Delete manifest first (the dir then reads as stale on any re-run),
-    then the dir.
-
-    ``min_age_sec`` (round-8 judge task 3, the Iceberg
-    ``expire_snapshots(older_than)`` contract): a superseded group is
-    only collected once its replacement's publish is at least this old
-    — the publish timestamp is the superseding group's manifest ``ts``
-    (stamped at publish by `_write_manifest_group`). With the default 0
-    every writer job still reclaims superseded pairs on entry (the
-    round-7 behavior); a positive retention makes
-    ``compact_encoded_job(gc=False)``'s grace window survive intervening
-    writer jobs, so in-flight readers of the pre-compaction snapshot can
-    drain on their own clock no matter who writes meanwhile. Stale
-    (never-committed) dirs are NOT retention-gated: no reader can hold
-    a plan over data that was never manifested. Returns
-    ``(stale_dirs_removed, superseded_groups_collected, live_groups)``
-    where live_groups is
-    the {group_id: manifest rows} of the valid, non-superseded groups
-    that survive the cleanup — computed from the SAME single manifest
-    read the cleanup itself uses, so callers holding the job lock
-    (encode resume, compaction) don't re-read the manifest dir."""
+    loudly instead."""
     data_dir = os.path.join(out, "data")
-    fs, jp, jvm = _hadoop_fs(spark, data_dir)
+    fs, jp, _ = hadoop_fs(spark, data_dir)
     if not fs.exists(jp):
-        return 0, 0, {}
-    mdir = _manifest_dir(out)
-    mfs, mjp, _ = _hadoop_fs(spark, mdir)
-    present = set()
-    if mfs.exists(mjp):
-        present = {st.getPath().getName() for st in mfs.listStatus(mjp)}
-    valid: set[str] = set()
-    superseded: set[int] = set()
-    pub_ts: dict[int, float] = {}  # superseded gid -> replacement's ts
-    groups: dict[int, list[dict]] = {}
-    flagged = _read_manifest_flagged(spark, out)
-    if flagged is not None:
-        for r in (flagged.filter(F.col("_file_valid"))
-                  .select(*_MANIFEST_COLS, "_mf").collect()):
-            name = r["_mf"].rsplit("/", 1)[-1]
-            valid.add(name)
-            if r["supersedes"]:
-                for g in json.loads(r["supersedes"]):
-                    superseded.add(int(g))
-                    pub_ts[int(g)] = max(pub_ts.get(int(g), 0.0),
-                                         float(r["ts"] or 0.0))
-            if name.startswith("group-") and name.endswith(".json"):
-                groups.setdefault(int(name[6:-5]), []).append(r.asDict())
-    removed = 0
-    Path = jvm.org.apache.hadoop.fs.Path
+        return {}
+    dirs: dict[int, list[str]] = {}
     for st in fs.listStatus(jp):
         name = st.getPath().getName()
         if not name.startswith("commit="):
@@ -840,36 +398,25 @@ def _clean_stale_commit_dirs(spark: SparkSession, out: str,
                 "commit=<int> dir this pipeline wrote. The output dir "
                 "is single-writer, single-layout — remove the foreign "
                 "entry or point the job at a fresh output dir") from None
-        gname = _manifest_group_name(gid)
-        if gname in valid:
-            continue
-        if gname in present:
-            # partial/invalid manifest: drop BOTH halves of the commit
-            mfs.delete(Path(mdir, gname), False)
-        fs.delete(st.getPath(), True)
-        removed += 1
-    collected = 0
-    now = time.time()
-    for gid in sorted(superseded):
-        if min_age_sec > 0 and now - pub_ts.get(gid, 0.0) < min_age_sec:
-            # retention: the replacement published too recently — leave
-            # the superseded pair for a later pass (readers may still
-            # hold plans over the old snapshot). It stays invisible to
-            # manifest-driven reads meanwhile.
-            groups.pop(gid, None)
-            continue
-        gname = _manifest_group_name(gid)
-        had_manifest = gname in valid and mfs.exists(Path(mdir, gname))
-        if had_manifest:
-            mfs.delete(Path(mdir, gname), False)
-        dpath = Path(data_dir, f"commit={gid:05d}")
-        had_dir = fs.exists(dpath)
-        if had_dir:
-            fs.delete(dpath, True)
-        if had_manifest or had_dir:
-            collected += 1
-        groups.pop(gid, None)
-    return removed, collected, groups
+        dirs[gid] = [str(st.getPath())]
+    return dirs
+
+
+def _collect_garbage(spark: SparkSession, out: str,
+                     min_age_sec: float = 0.0
+                     ) -> tuple[int, int, dict[int, list[dict]]]:
+    """`storage.collect_garbage` over the commit dirs: a commit dir
+    whose group manifest is absent or invalid never fully committed, so
+    every one of its buckets is still pending and will be re-encoded —
+    under a possibly DIFFERENT grouping — into a fresh commit dir;
+    leaving the orphan would double-count those buckets. Superseded
+    groups (a published compaction replaced them) are collected once
+    the replacement's publish is older than ``min_age_sec`` (Iceberg's
+    ``expire_snapshots(older_than)``) and the retention the compaction
+    stamped. Returns ``(stale_dirs_removed, superseded_groups_collected,
+    live_groups)``."""
+    return storage.collect_garbage(
+        spark, out, lambda: _commit_dirs(spark, out), min_age_sec)
 
 
 def run_encode_job_files(
@@ -900,7 +447,7 @@ def run_encode_job_files(
     Crash-consistency (round-6): the group manifest is a single
     tmp+rename, so a group is all-committed or not-committed; any
     ``commit=*`` data dir without its group manifest is deleted on the
-    next (re)start before processing (`_clean_stale_commit_dirs`) —
+    next (re)start before processing (`_collect_garbage`) —
     resumes are idempotent even when the surviving run regroups the
     pending buckets (different `buckets_per_commit`). The manifest
     records each bucket's file list (lineage: which inputs produced
@@ -913,7 +460,7 @@ def run_encode_job_files(
     growth (round-7 judge task 1). `n_buckets` applies per version
     (the initial plan and each appended batch independently).
 
-    A single-writer job lock (`_JobLock`, `out/job.lock`) is held for
+    A single-writer job lock (`storage.JobLock`, `out/job.lock`) is held for
     the duration of the run: a second driver pointed at the same
     output dir fails loudly instead of interleaving commit groups
     (round-7 judge task 5); `lock_lease_sec` bounds how long a
@@ -923,18 +470,12 @@ def run_encode_job_files(
     g-th group's data write but BEFORE its manifest commit — the exact
     window the cleanup protocol exists for."""
     live = _list_input_files(spark, input_path)
-    job_lock = _JobLock(spark, out, lock_lease_sec).acquire()
-    ok = False
-    try:
-        summary = _run_encode_job_files_locked(
+    with JobLock(spark, out, lock_lease_sec) as job_lock:
+        return _run_encode_job_files_locked(
             spark, out, live, n_buckets, chunk_size, buckets_per_commit,
             fail_after_buckets, statistics, concurrent_commits,
             fail_before_manifest_group, append, job_lock,
             gc_min_age_sec, catalog_checkpoint_after)
-        ok = True
-        return summary
-    finally:
-        job_lock.release(raise_on_stolen=ok)
 
 
 def _run_encode_job_files_locked(
@@ -947,7 +488,7 @@ def _run_encode_job_files_locked(
     if not versions:
         files = sorted(live)
         ver = _new_catalog_version(0, 0, n_buckets, files, live)
-        legacy = _read_small_file(
+        legacy = read_small_file(
             spark, os.path.join(out, "catalog_fingerprint.json"))
         if legacy is not None:
             # pre-round-7 output dir: same refusal contract as the old
@@ -993,7 +534,7 @@ def _run_encode_job_files_locked(
     # every job start — fold into one checkpoint once they pile up
     checkpointed = 0
     if catalog_checkpoint_after is not None:
-        cfs, cjp, _ = _hadoop_fs(spark, _catalog_dir(out))
+        cfs, cjp, _ = hadoop_fs(spark, _catalog_dir(out))
         loose = sum(
             1 for st in cfs.listStatus(cjp)
             if st.getPath().getName().startswith("version-"))
@@ -1004,8 +545,7 @@ def _run_encode_job_files_locked(
     for v in versions:
         buckets.update(_version_buckets(v))
     sizes = {f: s for v in versions for f, s in v["files"]}
-    stale, collected, _ = _clean_stale_commit_dirs(spark, out,
-                                                   gc_min_age_sec)
+    stale, collected, _ = _collect_garbage(spark, out, gc_min_age_sec)
     done = completed_buckets(spark, out)
     pending = [b for b in sorted(buckets) if b not in done]
     summary = {"resumed_buckets": len(done), "processed_buckets": 0,
@@ -1137,8 +677,7 @@ def _process_file_commit_group(spark, buckets, sizes, batch_buckets, out,
         chunked = enc.split_skew(tagged, chunk_size,
                                  passthrough=("bucket",))
         encoded = _encode_with_bucket(chunked)
-        commit_dir = os.path.join(out, "data",
-                                  f"commit={batch_buckets[0]:05d}")
+        commit_dir = _commit_dir(out, batch_buckets[0])
         enc.write_encoded(
             encoded,
             commit_dir,
@@ -1196,13 +735,12 @@ def _process_file_commit_group(spark, buckets, sizes, batch_buckets, out,
             "codec_hist": json.dumps(hist),
             "block_crc": int(metrics.get(f"crc_{b}", 0)),
             "wall_sec": wall / max(len(batch_buckets), 1),
-            "ts": time.time(),
             "files": json.dumps(buckets.get(b, [])),
         })
     # ONE atomic manifest file for the whole group (round-6 ADVICE high):
     # named by the group id = first bucket, which also names the commit
-    # data dir — the pairing _clean_stale_commit_dirs checks
-    _write_manifest_group(spark, out, batch_buckets[0], rows)
+    # data dir — the pairing _collect_garbage checks
+    storage.publish_group(spark, out, batch_buckets[0], rows)
     for row in rows:
         if lock is not None:
             with lock:
@@ -1226,7 +764,7 @@ def read_encoded(spark: SparkSession, out: str) -> DataFrame:
     (see the reader-race note there). With no valid group yet the
     result is an empty frame with the columns of a committed read."""
     data_dir = os.path.join(out, "data")
-    live = sorted(_live_group_ids(_valid_group_manifests(spark, out)))
+    live = sorted(storage.live_group_ids(storage.read_groups(spark, out)))
     if not live:
         # a committed read's columns: the encoded blocks with their
         # bucket, then the commit=<g>/source=<s> partition columns
@@ -1235,15 +773,14 @@ def read_encoded(spark: SparkSession, out: str) -> DataFrame:
         return empty.select(
             *[c for c in empty.columns if c != "source"], "source")
     return (spark.read.option("basePath", data_dir)
-            .parquet(*[os.path.join(data_dir, f"commit={g:05d}")
-                       for g in live]))
+            .parquet(*[_commit_dir(out, g) for g in live]))
 
 
 def _count_part_files(spark: SparkSession, dirs: list[str]) -> int:
     """Data (non-hidden) files under `dirs`, recursively."""
     n = 0
     for d in dirs:
-        fs, jp, _ = _hadoop_fs(spark, d)
+        fs, jp, _ = hadoop_fs(spark, d)
         if not fs.exists(jp):
             continue
         it = fs.listFiles(jp, True)
@@ -1276,35 +813,29 @@ def compact_encoded_job(
     into one new group of ~`target_file_bytes`-sized files, then
     atomically retires the originals.
 
-    Crash-safe by construction, no journal:
+    Crash-safe by construction, no journal (the `storage` protocol):
     1. the new group's data dir is written first — unmanifested, so a
-       crash here leaves a dir the next run's `_clean_stale_commit_dirs`
+       crash here leaves a dir the next run's `_collect_garbage`
        deletes (readers never see it: `read_encoded` is manifest-driven);
     2. ONE rename publishes the new group manifest, whose rows carry
        ``supersedes=[old group ids]`` — readers atomically flip from
        the old dirs to the new one;
-    3. GC deletes the old manifests then dirs; a crash anywhere in 3
-       is rolled forward by the cleanup's superseded pass on the next
-       run (and tolerated meanwhile — superseded groups are dropped at
-       read time even with their files still on disk).
+    3. the shared GC pass deletes the old manifests then dirs; a crash
+       anywhere in 3 is rolled forward by the next writer's pass (and
+       tolerated meanwhile — superseded groups are dropped at read time
+       even with their files still on disk).
 
-    READER RACE with immediate GC (`gc=True`, the default): the swap
-    is atomic only for reads that RESOLVE their file list after the
-    publish. A reader whose plan was built before the publish (or that
-    is mid-scan) still points at the old dirs, and step 3 deletes them
-    out from under it — fine for this engine's single-process jobs,
-    NOT fine with concurrent readers. For those, run with ``gc=False``
-    (superseded pairs stay on disk, invisible to manifest-driven
-    reads) and reclaim later with `vacuum_encoded` once in-flight
-    readers have drained — the Iceberg expire-snapshots split. Every
-    writer (encode resume, another compact, vacuum) runs the
-    superseded-GC pass on entry, so with the default
-    ``gc_min_age_sec=0`` the grace window lasts only until the NEXT
-    writer job; set the same positive ``gc_min_age_sec`` retention on
-    every job against the dir to make the window TIME-based instead
-    (round-8 judge task 3): superseded pairs survive intervening
-    writers until their replacement's publish is older than the
-    retention.
+    READER RACE with immediate GC (`gc=True` and the default
+    ``gc_min_age_sec=0``): the swap is atomic only for reads that
+    RESOLVE their file list after the publish. A reader whose plan was
+    built before the publish (or that is mid-scan) still points at the
+    old dirs, and step 3 deletes them out from under it. For
+    concurrent readers, either run with ``gc=False`` (superseded pairs
+    stay on disk, invisible to manifest-driven reads) and reclaim later
+    with `vacuum_encoded` — the Iceberg expire-snapshots split — or set
+    a positive ``gc_min_age_sec``: it is stamped in the new group's
+    manifest, so the superseded pairs survive every writer's GC pass,
+    this one's included, until the publish is that old.
 
     The rewrite is verified before publish: a read-back of the new dir
     must reproduce every bucket's manifested (n_rows, block_crc)
@@ -1318,17 +849,11 @@ def compact_encoded_job(
     Holds the same single-writer `out/job.lock` as the encode job.
     `fail_before_manifest_bin` / `fail_before_gc_bin` (tests only)
     crash before bin i's publish / GC — the two protocol windows."""
-    job_lock = _JobLock(spark, out, lock_lease_sec).acquire()
-    ok = False
-    try:
-        summary = _compact_locked(
+    with JobLock(spark, out, lock_lease_sec) as job_lock:
+        return _compact_locked(
             spark, out, target_group_output_bytes, target_file_bytes,
             statistics, fail_before_manifest_bin, fail_before_gc_bin,
             gc, job_lock, gc_min_age_sec)
-        ok = True
-        return summary
-    finally:
-        job_lock.release(raise_on_stolen=ok)
 
 
 def vacuum_encoded(spark: SparkSession, out: str,
@@ -1342,19 +867,10 @@ def vacuum_encoded(spark: SparkSession, out: str,
 
     ``min_age_sec`` bounds the reclaim by publish age (Iceberg's
     ``expire_snapshots(older_than)``): pairs whose replacement
-    published less than this many seconds ago are left on disk. Pair
-    it with the same ``gc_min_age_sec`` on the ENCODE/COMPACT jobs so
-    an intervening writer doesn't end the grace window early (the
-    round-7 behavior this parameter exists to fix)."""
-    job_lock = _JobLock(spark, out, lock_lease_sec).acquire()
-    ok = False
-    try:
-        _, collected, _ = _clean_stale_commit_dirs(spark, out,
-                                                   min_age_sec)
-        ok = True
-        return collected
-    finally:
-        job_lock.release(raise_on_stolen=ok)
+    published less than this many seconds ago — or less than the
+    retention the compaction stamped — are left on disk."""
+    with JobLock(spark, out, lock_lease_sec):
+        return _collect_garbage(spark, out, min_age_sec)[1]
 
 
 def _compact_locked(spark, out, target_group_output_bytes,
@@ -1365,8 +881,7 @@ def _compact_locked(spark, out, target_group_output_bytes,
     data_dir = os.path.join(out, "data")
     # one manifest read serves the cleanup AND the live-group plan (the
     # job lock guarantees nothing changes in between)
-    stale, collected, groups = _clean_stale_commit_dirs(spark, out,
-                                                        gc_min_age_sec)
+    stale, collected, groups = _collect_garbage(spark, out, gc_min_age_sec)
     summary = {"groups_before": len(groups), "groups_after": len(groups),
                "bins_merged": 0, "buckets_rewritten": 0,
                "bytes_rewritten": 0, "files_before": 0, "files_after": 0,
@@ -1404,21 +919,17 @@ def _compact_locked(spark, out, target_group_output_bytes,
         summary["wall_sec"] = time.time() - t0
         return summary
     next_gid = 1 + _max_allocated_id(spark, out, read_catalog(spark, out))
-    mdir = _manifest_dir(out)
-    mfs, _, jvm = _hadoop_fs(spark, mdir)
-    Path = jvm.org.apache.hadoop.fs.Path
     merged = 0
     for bi, bin_gids in enumerate(bins):
         if job_lock is not None:
             job_lock.check()  # abort if the lease protection died
         bin_t0 = time.time()
-        old_dirs = [os.path.join(data_dir, f"commit={g:05d}")
-                    for g in bin_gids]
+        old_dirs = [_commit_dir(out, g) for g in bin_gids]
         summary["files_before"] += _count_part_files(spark, old_dirs)
         bin_bytes = sum(out_bytes[g] for g in bin_gids)
         new_gid = next_gid
         next_gid += 1
-        new_dir = os.path.join(data_dir, f"commit={new_gid:05d}")
+        new_dir = _commit_dir(out, new_gid)
         df = (spark.read.option("basePath", data_dir).parquet(*old_dirs)
               .drop("commit"))
         n_files = max(1, -(-bin_bytes // target_file_bytes))
@@ -1449,24 +960,20 @@ def _compact_locked(spark, out, target_group_output_bytes,
             "codec_hist": r["codec_hist"],
             "block_crc": int(r["block_crc"] or 0),
             "wall_sec": wall / max(len(old_rows), 1),
-            "ts": time.time(), "files": r["files"],
+            "files": r["files"],
         } for r in old_rows]
         if fail_before_manifest_bin == bi:
             raise RuntimeError(
                 "injected failure before compaction manifest publish")
-        _write_manifest_group(spark, out, new_gid, rows,
-                              supersedes=bin_gids)
+        storage.publish_group(spark, out, new_gid, rows,
+                              supersedes=bin_gids,
+                              retain_sec=gc_min_age_sec)
         if fail_before_gc_bin == bi:
             raise RuntimeError("injected failure before compaction GC")
         if gc:
-            # GC: manifest first (its absence makes the dir stale on
-            # any re-run), then the dir — idempotent either way. With
-            # gc=False the superseded pairs stay on disk (invisible to
-            # manifest-driven readers) until `vacuum_encoded`.
-            for g, d in zip(bin_gids, old_dirs):
-                mfs.delete(Path(mdir, _manifest_group_name(g)), False)
-                dfs, djp, _ = _hadoop_fs(spark, d)
-                dfs.delete(djp, True)
+            # with gc=False the superseded pairs stay on disk (invisible
+            # to manifest-driven readers) until `vacuum_encoded`
+            _collect_garbage(spark, out, gc_min_age_sec)
         summary["files_after"] += _count_part_files(spark, [new_dir])
         summary["bins_merged"] += 1
         summary["buckets_rewritten"] += len(rows)

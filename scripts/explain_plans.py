@@ -464,11 +464,12 @@ def main() -> None:
         _sh.rmtree(seq_dir, ignore_errors=True)
         _sh.rmtree(_os.path.dirname(out_dir), ignore_errors=True)
 
-    # 21. IVF-PQ cell compaction (round 8): the staging rewrite must
-    # scan ONLY the picked cells (partition-pruned) and pick up the
-    # per-cell slice counts via a BroadcastHashJoin (no shuffle of the
-    # index rows beyond the one explicit repartition that shapes the
-    # output files)
+    # 21. IVF-PQ cell compaction (round 8): the merged group's rewrite
+    # must scan ONLY the live groups' cell dirs of the manifest snapshot
+    # and pick up the per-cell slice counts via a BroadcastHashJoin (no
+    # shuffle of the index rows beyond the one explicit repartition
+    # that shapes the output files)
+    import glob as _glob
     import tempfile as _tf
 
     cc_path = _tf.mkdtemp(prefix="plans_cc_") + "/idx"
@@ -479,32 +480,38 @@ def main() -> None:
         similarity.write_ivf_pq_index(h1, 64, cc_path, n_centroids=8,
                                       m=8)
         similarity.append_ivf_pq_index(h2, 64, cc_path)
-        # the same frame compact_ivf_pq_cells stages (similarity.py:
-        # the picked-cells scan + broadcast slices join + explicit
-        # repartition), captured here for the plan evidence
-        picked = [1, 2, 3]
-        live = spark.read.parquet(f"{cc_path}/cells").filter(
-            F.col("cell").isin(picked))
+        # the same frame compact_ivf_pq_cells writes as its new group
+        # (similarity.py: the live-groups scan + broadcast slices join +
+        # explicit repartition), captured here for the plan evidence
+        live = similarity.read_ivf_pq_cells(spark, cc_path)
+        n_live_dirs = len(_glob.glob(f"{cc_path}/cells/cell=*/g=*"))
         slices = spark.createDataFrame(
-            [(j, 2) for j in picked], "cell int, n_slices int")
+            [(j, 2) for j in range(1, 9)], "cell int, n_slices int")
         staged = (live.join(F.broadcast(slices), "cell")
                   .repartition(12, F.col("cell"),
                                F.pmod(F.xxhash64(F.col("vec_id")),
                                       F.col("n_slices")))
                   .drop("n_slices"))
         p = plan_of(staged)
-        pruned = bool(re.search(
-            r"PartitionFilters: \[[^\]]*cell", p))
+        # "Location: InMemoryFileIndex [p1, p2, ... N entries]": the
+        # shown root paths plus N more
+        loc = re.search(r"Location: InMemoryFileIndex \[(.*)\]", p)
+        shown = loc.group(1).split(", ") if loc else []
+        more = re.fullmatch(r"\.\.\. (\d+) entries", shown[-1]) \
+            if shown else None
+        n_listed = len(shown) - 1 + int(more.group(1)) if more \
+            else len(shown)
         # count plan NODES (the "(n) Exchange" detail headers), not raw
         # substrings — the formatted output prints each node twice
         # (tree + details) and "BroadcastExchange" contains "Exchange"
         n_exchanges = len(re.findall(r"^\(\d+\) Exchange\s*$", p, re.M))
         sections.append((
-            "IVF-PQ cell compaction rewrite: picked-cells scan pruned, "
+            "IVF-PQ cell compaction rewrite: live-groups scan, "
             "broadcast slices, one explicit exchange",
             p,
-            ["cell filter reaches the scan as PartitionFilters -> %s"
-             % ("PASS" if pruned else "FAIL"),
+            ["the scan lists exactly the live groups' cell dirs -> %s"
+             % ("PASS" if n_listed == n_live_dirs
+                else f"FAIL ({n_listed} of {n_live_dirs})"),
              "slice counts join as BroadcastHashJoin -> %s"
              % ("PASS" if "BroadcastHashJoin" in p else "FAIL"),
              "exactly ONE row-data Exchange (the explicit output-file "

@@ -9,9 +9,10 @@ cells), that:
 
 1. after a build + 4 appends the live cells really do hold ~5 files
    each (the accretion is real, not hypothetical);
-2. `compact_ivf_pq_cells` rewrites them back to the target file count
-   with the SAME query results byte-for-byte across the atomic swap
-   (every (query_id, rank, neighbor_id, cosine) tuple identical);
+2. `compact_ivf_pq_cells` merges the live groups back to the target
+   file count with the SAME query results byte-for-byte across its
+   manifest publish (every (query_id, rank, neighbor_id, cosine) tuple
+   identical);
 3. the per-append drift canary stays QUIET on all four IID appends
    (same generator as the corpus) and FIRES on a shifted 8-mode
    Gaussian mixture the frozen centroids never saw.
@@ -44,14 +45,16 @@ DRIFT_ROWS = 50_000
 
 
 def cell_file_stats(idx_path: str) -> dict:
+    """Data files per ``cells/cell=<j>/`` root, all groups counted (the
+    compaction's GC has run, so no superseded group is left)."""
     cells = os.path.join(idx_path, "cells")
     counts = []
     for d in os.listdir(cells):
         if not d.startswith("cell="):
             continue
         counts.append(sum(
-            1 for f in os.listdir(os.path.join(cells, d))
-            if not f.startswith(("_", "."))))
+            1 for _, _, fs in os.walk(os.path.join(cells, d))
+            for f in fs if not f.startswith(("_", "."))))
     return {"n_cells_on_disk": len(counts), "files_total": sum(counts),
             "files_per_cell_max": max(counts),
             "files_per_cell_mean": round(sum(counts) / len(counts), 2)}
@@ -109,7 +112,8 @@ def main() -> None:
     out["before_compact"] = before
     assert before["files_per_cell_max"] >= N_PARTS, before
 
-    # query snapshot across the swap: every tuple must be identical
+    # query snapshot across the compaction's publish: every tuple must
+    # be identical
     qids = [i * 977 % N_VECS for i in range(32)]
     queries = corpus.filter(F.col("vec_id").isin(qids)) \
         .withColumn("vec_id", F.col("vec_id") + 10 * N_VECS)
@@ -139,7 +143,7 @@ def main() -> None:
                   for r in sim.ivf_pq_query(queries, DIM, idx_path, k=K,
                                             nprobe=8, refine=8).collect())
     out["query_wall_after_sec"] = round(time.time() - t0, 2)
-    out["queries_identical_across_swap"] = post == pre
+    out["queries_identical_across_compaction"] = post == pre
     assert post == pre
 
     # drifted append: an 8-mode mixture shifted off the corpus — the
@@ -196,8 +200,8 @@ def main() -> None:
             f"{s['cells_compacted']} cells rewritten in "
             f"{out['compact_sec']} s ({out['compact_over_build']}x the "
             f"build)\n"
-            f"- query results across the atomic swap: "
-            f"**{'identical' if out['queries_identical_across_swap'] else 'MISMATCH'}** "
+            f"- query results across the compaction's publish: "
+            f"**{'identical' if out['queries_identical_across_compaction'] else 'MISMATCH'}** "
             f"(all 32x{K} (query, rank, neighbor, cosine) tuples); "
             f"rows preserved {out['rows_preserved']:,}\n"
             f"- drift canary: quiet on all 4 IID appends (max top-cell "

@@ -6,6 +6,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from parquet_playground_rs_spark import storage
 from parquet_playground_rs_spark.operators import similarity
 
 SF = "/root/testdata/sf0.001"
@@ -295,6 +296,24 @@ def test_pq_float32_refine_column(spark, emb, tmp_path):
 # Index append (round 7): grow a persisted index under the frozen model
 # ---------------------------------------------------------------------------
 
+def _halves(emb):
+    return (emb.filter(F.pmod(F.xxhash64("vec_id"), F.lit(2)) == 0),
+            emb.filter(F.pmod(F.xxhash64("vec_id"), F.lit(2)) == 1))
+
+
+def _indexed(spark, path):
+    """(rows, distinct ids) of the index's live snapshot."""
+    cells = similarity.read_ivf_pq_cells(spark, path)
+    return cells.count(), cells.select("vec_id").distinct().count()
+
+
+def _group_ids_on_disk(path):
+    import glob
+
+    return sorted({int(d.rsplit("=", 1)[1])
+                   for d in glob.glob(f"{path}/cells/cell=*/g=*")})
+
+
 def test_pq_append_grows_index_and_queries_see_it(spark, emb, tmp_path):
     """Build on half the corpus, append the other half: the index holds
     every row exactly once, appended vectors are findable (an appended
@@ -302,12 +321,11 @@ def test_pq_append_grows_index_and_queries_see_it(spark, emb, tmp_path):
     is the query's best cell, and refine is exact), and the appended
     files carry the same schema/cell layout the query path prunes on."""
     path = str(tmp_path / "idx_append")
-    half1 = emb.filter(F.pmod(F.xxhash64("vec_id"), F.lit(2)) == 0)
-    half2 = emb.filter(F.pmod(F.xxhash64("vec_id"), F.lit(2)) == 1)
+    half1, half2 = _halves(emb)
     similarity.write_ivf_pq_index(half1, DIM, path, n_centroids=16, m=8)
     s = similarity.append_ivf_pq_index(half2, DIM, path)
     assert s["appended_rows"] == half2.count()
-    assert s["files_moved"] > 0 and s["recovered_moves"] == 0
+    assert s["files_moved"] > 0 and s["stale_groups_cleaned"] == 0
     cells = spark.read.parquet(f"{path}/cells")
     assert cells.count() == emb.count()
     assert cells.select("vec_id").distinct().count() == emb.count()
@@ -322,48 +340,46 @@ def test_pq_append_grows_index_and_queries_see_it(spark, emb, tmp_path):
         assert r["cosine"] == pytest.approx(1.0, abs=1e-6)
 
 
-def test_pq_append_crash_mid_publish_rolls_forward(spark, emb, tmp_path):
-    """A crash during the per-file publish leaves a SUBSET of the new
-    vectors live (never duplicates); the next append call completes the
-    staged publish before doing its own work."""
+def test_pq_append_crash_before_publish_is_invisible(spark, emb, tmp_path):
+    """A crash after the append's files are written but before its
+    manifest publish leaves an orphan group: queries and the index row
+    count are exactly the pre-crash state, and the next writer deletes
+    the orphan before doing its own work."""
     path = str(tmp_path / "idx_crash")
-    half1 = emb.filter(F.pmod(F.xxhash64("vec_id"), F.lit(2)) == 0)
-    half2 = emb.filter(F.pmod(F.xxhash64("vec_id"), F.lit(2)) == 1)
+    half1, half2 = _halves(emb)
     similarity.write_ivf_pq_index(half1, DIM, path, n_centroids=16, m=8)
-    n1, n_all = half1.count(), emb.count()
-    with pytest.raises(RuntimeError, match="mid-publish"):
+    n1 = half1.count()
+    before = _query_rows(spark, emb, path)
+    with pytest.raises(RuntimeError, match="before the index append"):
         similarity.append_ivf_pq_index(half2, DIM, path,
-                                       fail_after_moves=2)
-    mid = spark.read.parquet(f"{path}/cells")
-    assert n1 <= mid.count() < n_all
-    assert mid.select("vec_id").distinct().count() == mid.count()
+                                       fail_before_publish=True)
+    assert _group_ids_on_disk(path) == [0, 1]  # the orphan is on disk
+    assert _indexed(spark, path) == (n1, n1)
+    assert _query_rows(spark, emb, path) == before
     s = similarity.append_ivf_pq_index(half2.limit(0), DIM, path)
-    assert s["recovered_moves"] > 0 and s["appended_rows"] == 0
-    done = spark.read.parquet(f"{path}/cells")
-    assert done.count() == n_all
-    assert done.select("vec_id").distinct().count() == n_all
+    assert s["stale_groups_cleaned"] == 1 and s["appended_rows"] == 0
+    assert _group_ids_on_disk(path) == [0]
+    assert _indexed(spark, path) == (n1, n1)
 
 
 def test_pq_append_preserves_refine_width_and_torn_stage(spark, emb,
                                                          tmp_path):
     """Appends to a float32-refine index stay float32 (the width is
-    read from the live schema); a torn stage (no _SUCCESS) is discarded
-    on the next call, not published."""
+    read from the index manifest); a torn, never-published group on
+    disk is deleted by the next append, not published."""
     import os
-    import shutil
 
     path = str(tmp_path / "idx_f32")
-    half1 = emb.filter(F.pmod(F.xxhash64("vec_id"), F.lit(2)) == 0)
-    half2 = emb.filter(F.pmod(F.xxhash64("vec_id"), F.lit(2)) == 1)
+    half1, half2 = _halves(emb)
     similarity.write_ivf_pq_index(half1, DIM, path, n_centroids=16, m=8,
                                   unit_dtype="float32")
-    # torn stage: files but no _SUCCESS — must be discarded, not moved
-    tmp = f"{path}/cells_append_tmp"
-    os.makedirs(f"{tmp}/cell=1")
-    open(f"{tmp}/cell=1/part-torn.parquet", "wb").write(b"junk")
+    # torn group: junk files no manifest names
+    torn = f"{path}/cells/cell=1/g=99"
+    os.makedirs(torn)
+    open(f"{torn}/part-torn.parquet", "wb").write(b"junk")
     n1 = half1.count()
     s = similarity.append_ivf_pq_index(half2, DIM, path)
-    assert s["recovered_moves"] == 0 and not os.path.exists(tmp)
+    assert s["stale_groups_cleaned"] == 1 and not os.path.exists(torn)
     cells = spark.read.parquet(f"{path}/cells")
     assert cells.count() == emb.count() and n1 < emb.count()
     assert dict(cells.dtypes)["unit"] == "array<float>"
@@ -376,7 +392,6 @@ def test_pq_append_preserves_refine_width_and_torn_stage(spark, emb,
     for r in res.collect():
         assert r["neighbor_id"] == r["query_id"] - 1_000_000
         assert r["cosine"] == pytest.approx(1.0, abs=1e-6)
-    shutil.rmtree(path)
 
 
 def test_pq_append_rejects_wrong_dim_and_id_type(spark, emb, tmp_path):
@@ -390,13 +405,11 @@ def test_pq_append_rejects_wrong_dim_and_id_type(spark, emb, tmp_path):
 
 
 def test_pq_append_holds_writer_lock(spark, emb, tmp_path):
-    """A concurrent second appender must refuse (both would stage into
-    one tmp dir and corrupt each other's publish)."""
-    from parquet_playground_rs_spark.plans.pipeline import _JobLock
-
+    """A concurrent second appender must refuse (both would allocate
+    the same group id and publish over each other)."""
     path = str(tmp_path / "idx_lock")
     similarity.write_ivf_pq_index(emb, DIM, path, n_centroids=16, m=8)
-    held = _JobLock(spark, path, lease_sec=30.0).acquire()
+    held = storage.JobLock(spark, path, lease_sec=30.0).acquire()
     try:
         with pytest.raises(RuntimeError, match="another writer holds"):
             similarity.append_ivf_pq_index(emb.limit(5), DIM, path)
@@ -406,78 +419,74 @@ def test_pq_append_holds_writer_lock(spark, emb, tmp_path):
 
 def test_pq_append_same_batch_retry_is_exactly_once(spark, emb, tmp_path):
     """The realistic retry — re-submitting the SAME batch after a crash
-    mid-publish — must finish the staged publish and NOT re-encode:
-    every vector indexed exactly once, flagged as a recognized retry."""
+    before the publish — indexes every vector exactly once: the orphan
+    of the crashed attempt is deleted, never published."""
     path = str(tmp_path / "idx_retry")
-    half1 = emb.filter(F.pmod(F.xxhash64("vec_id"), F.lit(2)) == 0)
-    half2 = emb.filter(F.pmod(F.xxhash64("vec_id"), F.lit(2)) == 1)
+    half1, half2 = _halves(emb)
     similarity.write_ivf_pq_index(half1, DIM, path, n_centroids=16, m=8)
-    with pytest.raises(RuntimeError, match="mid-publish"):
+    with pytest.raises(RuntimeError, match="before the index append"):
         similarity.append_ivf_pq_index(half2, DIM, path,
-                                       fail_after_moves=2)
+                                       fail_before_publish=True)
     s = similarity.append_ivf_pq_index(half2, DIM, path)  # same batch
-    assert s.get("retried_same_batch") is True
+    assert s.get("already_published") is None
+    assert s["stale_groups_cleaned"] == 1
     assert s["appended_rows"] == half2.count()
     n_all = emb.count()
-    cells = spark.read.parquet(f"{path}/cells")
+    assert _indexed(spark, path) == (n_all, n_all)
+    cells = spark.read.parquet(f"{path}/cells")  # no orphan left on disk
     assert cells.count() == n_all
-    assert cells.select("vec_id").distinct().count() == n_all
 
 
 def test_pq_append_fully_published_retry_short_circuits(spark, emb,
                                                         tmp_path):
-    """Round-7 ADVICE (low): a retry of an append that FULLY published
-    (crash between the stage-dir delete and the caller recording
-    success leaves no stage) used to be treated as a new batch and
-    re-encoded, indexing every vector twice. The durable
-    _LAST_APPEND.json fingerprint now short-circuits it."""
+    """A retry of an append that FULLY published (the caller crashed
+    before recording success) matches the batch fingerprint in a live
+    manifest and is not indexed twice — also after a compaction merged
+    the append's group into a new one."""
     import os
 
     path = str(tmp_path / "idx_pub_retry")
-    half1 = emb.filter(F.pmod(F.xxhash64("vec_id"), F.lit(2)) == 0)
-    half2 = emb.filter(F.pmod(F.xxhash64("vec_id"), F.lit(2)) == 1)
+    half1, half2 = _halves(emb)
     similarity.write_ivf_pq_index(half1, DIM, path, n_centroids=16, m=8)
     s1 = similarity.append_ivf_pq_index(half2, DIM, path)
     assert s1["files_moved"] > 0
-    # the fingerprint was persisted durably before the stage delete
-    assert os.path.exists(f"{path}/_LAST_APPEND.json")
+    # the fingerprint was published with the group
+    assert os.path.exists(f"{path}/manifest/group-00001.json")
     n_all = emb.count()
     # caller crashed before recording success; re-submits the batch
     s2 = similarity.append_ivf_pq_index(half2, DIM, path)
     assert s2.get("already_published") is True
     assert s2["files_moved"] == 0
     assert s2["appended_rows"] == half2.count()
-    cells = spark.read.parquet(f"{path}/cells")
-    assert cells.count() == n_all  # NOT indexed twice
-    assert cells.select("vec_id").distinct().count() == n_all
+    assert _indexed(spark, path) == (n_all, n_all)  # NOT indexed twice
+    assert similarity.compact_ivf_pq_cells(spark, path)["cells_compacted"]
+    s3 = similarity.append_ivf_pq_index(half2, DIM, path)
+    assert s3.get("already_published") is True and s3["files_moved"] == 0
+    assert _indexed(spark, path) == (n_all, n_all)
 
 
 def test_pq_append_corrected_vectors_discard_stale_stage(spark, emb,
                                                          tmp_path):
-    """Round-7 ADVICE (low): the fingerprint used to hash only the ids,
-    so a re-append with the SAME ids but corrected embeddings matched a
-    crashed stage of the OLD vectors and silently published the stale
-    encodings. The content sum (h3) now distinguishes them: the stale
-    stage is discarded and the corrected batch is encoded fresh."""
+    """The fingerprint binds ids to vectors: a crashed append of the
+    WRONG vectors, re-submitted with the same ids and corrected
+    embeddings, indexes the corrected vectors — the stale attempt's
+    files are deleted, never published."""
     path = str(tmp_path / "idx_correct")
-    half1 = emb.filter(F.pmod(F.xxhash64("vec_id"), F.lit(2)) == 0)
-    half2 = emb.filter(F.pmod(F.xxhash64("vec_id"), F.lit(2)) == 1)
+    half1, half2 = _halves(emb)
     similarity.write_ivf_pq_index(half1, DIM, path, n_centroids=16, m=8)
     n1 = half1.count()
-    # the WRONG vectors crash after staging, before any file moves
-    with pytest.raises(RuntimeError, match="mid-publish"):
+    with pytest.raises(RuntimeError, match="before the index append"):
         similarity.append_ivf_pq_index(half2, DIM, path,
-                                       fail_after_moves=0)
-    assert spark.read.parquet(f"{path}/cells").count() == n1
+                                       fail_before_publish=True)
+    assert _indexed(spark, path) == (n1, n1)
     # re-append the same ids with CORRECTED embeddings
     corrected = half2.withColumn("embedding", F.reverse("embedding"))
     s = similarity.append_ivf_pq_index(corrected, DIM, path)
-    assert s.get("retried_same_batch") is None
-    assert s["recovered_moves"] == 0  # stale stage discarded, not published
+    assert s.get("already_published") is None
+    assert s["stale_groups_cleaned"] == 1  # stale attempt deleted
     assert s["appended_rows"] == half2.count()
-    cells = spark.read.parquet(f"{path}/cells")
-    assert cells.count() == emb.count()
-    assert cells.select("vec_id").distinct().count() == emb.count()
+    n_all = emb.count()
+    assert _indexed(spark, path) == (n_all, n_all)
     # the index holds the CORRECTED vectors: querying by a corrected
     # embedding finds its own id at exact cosine 1.0
     q = corrected.orderBy("vec_id").limit(4) \
@@ -491,11 +500,74 @@ def test_pq_append_corrected_vectors_discard_stale_stage(spark, emb,
         assert r["cosine"] == pytest.approx(1.0, abs=1e-6)
 
 
+def test_pq_rebuild_resets_manifest_log(spark, emb, tmp_path):
+    """Rebuilding an index at the same path starts a new manifest log:
+    re-appending the batch last appended to the OLD index indexes it —
+    a fingerprint published against the old index must not match."""
+    path = str(tmp_path / "idx_rebuild")
+    half1, half2 = _halves(emb)
+    similarity.write_ivf_pq_index(half1, DIM, path, n_centroids=16, m=8)
+    similarity.append_ivf_pq_index(half2, DIM, path)
+    similarity.write_ivf_pq_index(half1, DIM, path, n_centroids=16, m=8)
+    n1 = half1.count()
+    assert spark.read.parquet(f"{path}/cells").count() == n1
+    s = similarity.append_ivf_pq_index(half2, DIM, path)
+    assert s.get("already_published") is None
+    assert s["appended_rows"] == half2.count()
+    n_all = emb.count()
+    cells = spark.read.parquet(f"{path}/cells")
+    assert cells.count() == n_all
+    assert cells.select("vec_id").distinct().count() == n_all
+
+
+def test_pq_index_without_manifest_is_refused(spark, emb, tmp_path):
+    """Cells with no published group manifest (an index written before
+    the manifest log, or a crashed build) are refused by readers and
+    writers alike with a rebuild error — no compatibility path."""
+    import shutil
+
+    path = str(tmp_path / "idx_nomf")
+    similarity.write_ivf_pq_index(emb, DIM, path, n_centroids=16, m=8)
+    shutil.rmtree(f"{path}/manifest")
+    q = emb.orderBy("vec_id").limit(2)
+    with pytest.raises(IOError, match="rebuild"):
+        similarity.ivf_pq_query(q, DIM, path, k=2, nprobe=2)
+    with pytest.raises(IOError, match="rebuild"):
+        similarity.append_ivf_pq_index(emb.limit(3), DIM, path)
+    with pytest.raises(IOError, match="rebuild"):
+        similarity.compact_ivf_pq_cells(spark, path)
+
+
+def test_pq_query_never_writes_or_locks(spark, emb, tmp_path):
+    """ivf_pq_query only reads: it runs while a writer holds the lock,
+    and the index tree is byte-for-byte unchanged by it."""
+    import os
+
+    path = str(tmp_path / "idx_ro")
+    _grown_index(spark, emb, path, parts=2)
+
+    def tree():
+        return sorted(
+            (os.path.relpath(os.path.join(d, f), path),
+             os.path.getsize(os.path.join(d, f)),
+             os.path.getmtime(os.path.join(d, f)))
+            for d, _, fs in os.walk(path) for f in fs if f != "job.lock")
+
+    held = storage.JobLock(spark, path, lease_sec=30.0).acquire()
+    try:
+        t0 = tree()
+        assert len(_query_rows(spark, emb, path)) > 0
+        assert tree() == t0
+    finally:
+        held.release()
+
+
 # ---------------------------------------------------------------------------
-# Cell-dir compaction (round 8): bound files/cell after repeated appends
+# Cell compaction (round 8): bound files/cell after repeated appends
 # ---------------------------------------------------------------------------
 
 def _cell_file_counts(path):
+    """{cell: data files under its cell=<j>/ root, all groups}."""
     import os
 
     out = {}
@@ -504,8 +576,8 @@ def _cell_file_counts(path):
         if not d.startswith("cell="):
             continue
         out[int(d[5:])] = sum(
-            1 for f in os.listdir(os.path.join(cells, d))
-            if not f.startswith(("_", ".")))
+            1 for _, _, fs in os.walk(os.path.join(cells, d))
+            for f in fs if not f.startswith(("_", ".")))
     return out
 
 
@@ -520,20 +592,28 @@ def _grown_index(spark, emb, path, parts=4):
         similarity.append_ivf_pq_index(s, DIM, path)
 
 
-def _query_rows(spark, emb, path):
-    q = emb.orderBy("vec_id").limit(6) \
+def _snap_queries(emb):
+    return emb.orderBy("vec_id").limit(6) \
         .withColumn("vec_id", F.col("vec_id") + 1_000_000)
-    return sorted(
-        (r["query_id"], r["rank"], r["neighbor_id"], r["cosine"])
-        for r in similarity.ivf_pq_query(q, DIM, path, k=3,
-                                         nprobe=4).collect())
+
+
+def _rows(result):
+    return sorted((r["query_id"], r["rank"], r["neighbor_id"], r["cosine"])
+                  for r in result.collect())
+
+
+def _query_rows(spark, emb, path):
+    return _rows(similarity.ivf_pq_query(_snap_queries(emb), DIM, path,
+                                         k=3, nprobe=4))
 
 
 def test_cell_compact_bounds_files_and_preserves_queries(spark, emb,
                                                          tmp_path):
     """After 3 appends every touched cell holds ~4 files; compaction
-    rewrites them to 1 file/cell and the query results are byte-
-    identical across the swap (round-7 judge ask #2)."""
+    merges the four groups into one with 1 file/cell, and the query
+    results are byte-identical across the publish."""
+    import os
+
     path = str(tmp_path / "idx_cc")
     _grown_index(spark, emb, path)
     before_files = _cell_file_counts(path)
@@ -542,88 +622,197 @@ def test_cell_compact_bounds_files_and_preserves_queries(spark, emb,
     n0 = spark.read.parquet(f"{path}/cells").count()
 
     s = similarity.compact_ivf_pq_cells(spark, path)
-    assert s["cells_compacted"] == sum(
-        1 for v in before_files.values() if v > 1)
+    assert s["cells_compacted"] == len(before_files)
+    assert s["files_before"] == sum(before_files.values())
     assert s["files_after"] < s["files_before"]
-    after_files = _cell_file_counts(path)
-    assert max(after_files.values()) == 1
+    assert s["superseded_groups_cleaned"] == 4
+    assert max(_cell_file_counts(path).values()) == 1
+    assert _group_ids_on_disk(path) == [4]
+    assert os.listdir(f"{path}/manifest") == ["group-00004.json"]
     assert spark.read.parquet(f"{path}/cells").count() == n0
     assert _query_rows(spark, emb, path) == before
-    # no staging/journal leftovers
-    import os
-    assert not os.path.exists(f"{path}/cells_compact_tmp")
-    assert not os.path.exists(f"{path}/_CELL_SWAP.json")
+    # no staging dirs or journal files next to cells/
+    assert not [n for n in os.listdir(path)
+                if n.startswith(("_CELL_SWAP", "cells_"))]
     # idempotent: a second run is a no-op below the threshold
     s2 = similarity.compact_ivf_pq_cells(spark, path)
     assert s2["cells_compacted"] == 0
 
 
-def test_cell_compact_crash_mid_swap_rolls_forward(spark, emb, tmp_path):
-    """The nastiest window — live cell moved aside, staged cell not yet
-    in. The journal (written after the read-back verify) lets the next
-    maintenance OR append job roll the swap forward; query results are
-    identical to pre-compaction."""
+def test_cell_compact_crash_before_publish_is_invisible(spark, emb,
+                                                        tmp_path):
+    """A crash after the merged group is written and verified but
+    before its publish: queries and the index row count stay the
+    pre-crash state (the new group is an orphan no reader resolves),
+    and the next writer — here an append — deletes it."""
     path = str(tmp_path / "idx_cc_crash")
     _grown_index(spark, emb, path)
     before = _query_rows(spark, emb, path)
     n0 = spark.read.parquet(f"{path}/cells").count()
-    with pytest.raises(RuntimeError, match="mid-swap"):
-        similarity.compact_ivf_pq_cells(spark, path, fail_mid_swap=True)
-    # one cell is missing from the live index right now
-    import os
-    assert os.path.exists(f"{path}/_CELL_SWAP.json")
-    assert spark.read.parquet(f"{path}/cells").count() < n0
-    # an APPEND (empty batch) recovers the swap before doing anything
+    with pytest.raises(RuntimeError, match="before the cell compaction"):
+        similarity.compact_ivf_pq_cells(spark, path, fail_before="publish")
+    assert _group_ids_on_disk(path) == [0, 1, 2, 3, 4]
+    assert _indexed(spark, path) == (n0, n0)
+    assert _query_rows(spark, emb, path) == before
     s = similarity.append_ivf_pq_index(emb.limit(0), DIM, path)
-    assert s["appended_rows"] == 0
-    assert not os.path.exists(f"{path}/_CELL_SWAP.json")
-    assert spark.read.parquet(f"{path}/cells").count() == n0
-    # the recovered state still needs compacting for the other cells;
-    # finish and compare
+    assert s["stale_groups_cleaned"] == 1
+    assert _group_ids_on_disk(path) == [0, 1, 2, 3]
     similarity.compact_ivf_pq_cells(spark, path)
     assert max(_cell_file_counts(path).values()) == 1
     assert _query_rows(spark, emb, path) == before
 
 
-def test_cell_compact_crash_recovered_by_query(spark, emb, tmp_path):
-    """Round-9 ADVICE (medium): the crashed-swap window must be bounded
-    on READ-MOSTLY deployments too — a plain ivf_pq_query finding the
-    swap journal rolls the swap forward itself (under the writer lock)
-    and returns results identical to pre-compaction, with no
-    maintenance or append job in between."""
+def _age_publish(path, gid, sec):
+    """Move group `gid`'s publish time (its rows' ts) `sec` seconds into
+    the past, as if its retention had been running that long."""
+    import json
+
+    mfile = f"{path}/manifest/group-{gid:05d}.json"
+    rows = [json.loads(ln) for ln in open(mfile).read().splitlines()]
+    for r in rows:
+        r["ts"] -= sec
+    with open(mfile, "w") as fh:
+        fh.write("".join(json.dumps(r) + "\n" for r in rows))
+
+
+def test_cell_compact_reader_interleaving_keeps_snapshot(spark, emb,
+                                                         tmp_path):
+    """A reader that resolved its snapshot before a compaction's publish
+    collects rows identical to the pre-compaction results: the
+    compaction's retention keeps the superseded files on disk — also
+    through an intervening append's GC pass — and a GC pass after the
+    retention expired removes them."""
     import os
 
-    path = str(tmp_path / "idx_cc_qrecover")
+    path = str(tmp_path / "idx_cc_reader")
     _grown_index(spark, emb, path)
     before = _query_rows(spark, emb, path)
-    n0 = spark.read.parquet(f"{path}/cells").count()
-    with pytest.raises(RuntimeError, match="mid-swap"):
-        similarity.compact_ivf_pq_cells(spark, path, fail_mid_swap=True)
-    assert os.path.exists(f"{path}/_CELL_SWAP.json")
-    assert spark.read.parquet(f"{path}/cells").count() < n0
-    # the QUERY itself recovers: journal gone, cells restored, rows
-    # identical — no append/compact ran
-    assert _query_rows(spark, emb, path) == before
-    assert not os.path.exists(f"{path}/_CELL_SWAP.json")
-    assert spark.read.parquet(f"{path}/cells").count() == n0
-    # and the writer lock was released (a maintenance job can run)
+    # 1. the reader builds its result (its cell files are listed now)
+    reader = similarity.ivf_pq_query(_snap_queries(emb), DIM, path,
+                                     k=3, nprobe=4)
+    # 2. a compactor publishes, retaining the superseded files
+    s = similarity.compact_ivf_pq_cells(spark, path, gc_min_age_sec=3600)
+    assert s["cells_compacted"] > 0
+    assert s["superseded_groups_cleaned"] == 0
+    # 3. the reader collects the pre-compaction snapshot
+    assert _rows(reader) == before
+    # the retention survives an intervening writer's GC pass
+    extra = emb.orderBy("vec_id").limit(3) \
+        .withColumn("vec_id", F.col("vec_id") + 5_000_000)
+    sa = similarity.append_ivf_pq_index(extra, DIM, path)
+    assert sa["appended_rows"] == 3
+    assert sa["superseded_groups_cleaned"] == 0
+    assert _group_ids_on_disk(path) == [0, 1, 2, 3, 4, 5]
+    # 4. once the retention expires, a later GC pass removes them
+    _age_publish(path, 4, 7200.0)
+    s2 = similarity.append_ivf_pq_index(emb.limit(0), DIM, path)
+    assert s2["superseded_groups_cleaned"] == 4
+    assert _group_ids_on_disk(path) == [4, 5]
+    assert sorted(os.listdir(f"{path}/manifest")) == \
+        ["group-00004.json", "group-00005.json"]
+    n_all = emb.count() + 3
+    assert spark.read.parquet(f"{path}/cells").count() == n_all
+
+
+def test_cell_compact_chain_with_mixed_retentions(spark, emb, tmp_path):
+    """compact(retention) -> append -> compact(): the second compaction
+    supersedes the first one's group, which must stay on disk as long
+    as the groups IT retains do — otherwise nothing supersedes those
+    any more and every vector of theirs is indexed twice. Once the
+    first retention expires, one GC pass collects the chain bottom-up."""
+    import os
+
+    path = str(tmp_path / "idx_cc_chain")
+    _grown_index(spark, emb, path)
+    similarity.compact_ivf_pq_cells(spark, path, gc_min_age_sec=3600)
+    extra = emb.orderBy("vec_id").limit(3) \
+        .withColumn("vec_id", F.col("vec_id") + 5_000_000)
+    similarity.append_ivf_pq_index(extra, DIM, path)
+    n = emb.count() + 3
+    before = _query_rows(spark, emb, path)
     s = similarity.compact_ivf_pq_cells(spark, path)
-    assert max(_cell_file_counts(path).values()) == 1
+    assert s["cells_compacted"] > 0
+    assert s["superseded_groups_cleaned"] == 1  # the append's group
+    assert _group_ids_on_disk(path) == [0, 1, 2, 3, 4, 6]
+    assert _indexed(spark, path) == (n, n)
+    assert _query_rows(spark, emb, path) == before
+    # the first retention expires: groups 0-3, then group 4
+    _age_publish(path, 4, 7200.0)
+    s2 = similarity.append_ivf_pq_index(emb.limit(0), DIM, path)
+    assert s2["superseded_groups_cleaned"] == 5
+    assert _group_ids_on_disk(path) == [6]
+    assert os.listdir(f"{path}/manifest") == ["group-00006.json"]
+    assert _indexed(spark, path) == (n, n)
 
 
-def test_cell_compact_crash_between_swaps_and_slicing(spark, emb,
-                                                      tmp_path):
-    """A crash BETWEEN cell swaps resumes via recovery on the next
-    compaction run; a tiny target_file_bytes slices big cells into
+def test_cells_read_resolves_again_when_gc_races_listing(spark, emb,
+                                                         tmp_path,
+                                                         monkeypatch):
+    """A GC pass that runs between a reader's manifest snapshot and its
+    file listing deletes files the snapshot resolved. The reader finds
+    a resolved group's manifest gone after listing and resolves a fresh
+    snapshot instead of scanning a subset — or failing, once every dir
+    of the snapshot is gone."""
+    import glob
+    import os
+    import shutil
+
+    path = str(tmp_path / "idx_race")
+    _grown_index(spark, emb, path, parts=3)
+    n = emb.count()
+    list_cells = similarity._live_cells
+
+    def gc_before_first_listing(gc_step):
+        done = []
+
+        def wrapped(spark_, path_, live):
+            if not done:
+                done.append(True)
+                gc_step()
+            return list_cells(spark_, path_, live)
+
+        monkeypatch.setattr(similarity, "_live_cells", wrapped)
+
+    def gc_midway():
+        # a GC pass that has collected group 0 of the superseded 0-2
+        with pytest.raises(RuntimeError, match="before the cell compaction"):
+            similarity.compact_ivf_pq_cells(spark, path, fail_before="gc")
+        os.remove(f"{path}/manifest/group-00000.json")
+        for d in glob.glob(f"{path}/cells/cell=*/g=0"):
+            shutil.rmtree(d)
+
+    gc_before_first_listing(gc_midway)
+    assert _indexed(spark, path) == (n, n)
+    assert _group_ids_on_disk(path) == [1, 2, 3]
+    # every dir of the snapshot {3, 4} gone: the listing fails, then
+    # the read resolves group 5
+    extra = emb.orderBy("vec_id").limit(3) \
+        .withColumn("vec_id", F.col("vec_id") + 5_000_000)
+    similarity.append_ivf_pq_index(extra, DIM, path)
+    gc_before_first_listing(lambda: similarity.compact_ivf_pq_cells(
+        spark, path))
+    assert _indexed(spark, path) == (n + 3, n + 3)
+    assert _group_ids_on_disk(path) == [5]
+
+
+def test_cell_compact_crash_before_gc_and_slicing(spark, emb, tmp_path):
+    """A crash after the publish but before the GC leaves superseded
+    files readers no longer resolve (no double count); the next writer
+    collects them. A tiny target_file_bytes slices big cells into
     multiple bounded files instead of one monolith."""
     path = str(tmp_path / "idx_cc_slice")
     _grown_index(spark, emb, path)
     before = _query_rows(spark, emb, path)
     n0 = spark.read.parquet(f"{path}/cells").count()
-    with pytest.raises(RuntimeError, match="between cell swaps"):
-        similarity.compact_ivf_pq_cells(spark, path, fail_after_swaps=1)
+    with pytest.raises(RuntimeError, match="before the cell compaction"):
+        similarity.compact_ivf_pq_cells(spark, path, fail_before="gc")
+    assert _group_ids_on_disk(path) == [0, 1, 2, 3, 4]
+    assert _indexed(spark, path) == (n0, n0)
+    assert _query_rows(spark, emb, path) == before
     s = similarity.compact_ivf_pq_cells(spark, path)
-    assert s["recovered_swaps"] > 0
+    assert s["superseded_groups_cleaned"] == 4
+    assert s["cells_compacted"] == 0  # the published group is 1 file/cell
+    assert _group_ids_on_disk(path) == [4]
     assert spark.read.parquet(f"{path}/cells").count() == n0
     assert max(_cell_file_counts(path).values()) == 1
     assert _query_rows(spark, emb, path) == before

@@ -7,6 +7,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from parquet_playground_rs_spark import storage
 from parquet_playground_rs_spark.plans import pipeline as pl
 from parquet_playground_rs_spark.sources.generator import sequences_df
 
@@ -304,7 +305,7 @@ def test_concurrent_writer_refused(spark, seq, seq_path, tmp_path):
     """Round-7 judge task 5: a second driver against a LIVE output dir
     fails loudly before planning or writing anything."""
     out = str(tmp_path / "lock1")
-    held = pl._JobLock(spark, out, lease_sec=60).acquire()
+    held = storage.JobLock(spark, out, lease_sec=60).acquire()
     try:
         with pytest.raises(RuntimeError, match="another writer holds"):
             pl.run_encode_job_files(spark, seq_path, out, n_buckets=3,
@@ -402,7 +403,7 @@ def test_lock_heartbeat_touches_mtime_not_content(spark, tmp_path):
 
     out = str(tmp_path / "lock3")
     os.makedirs(out)
-    held = pl._JobLock(spark, out, lease_sec=2.0).acquire()
+    held = storage.JobLock(spark, out, lease_sec=2.0).acquire()
     try:
         lock_path = os.path.join(out, "job.lock")
         body0 = open(lock_path).read()
@@ -413,7 +414,7 @@ def test_lock_heartbeat_touches_mtime_not_content(spark, tmp_path):
         # a second writer still sees a live (fresh-mtime) lock, even
         # though the ORIGINAL acquisition is older than the lease soon
         with pytest.raises(RuntimeError, match="another writer holds"):
-            pl._JobLock(spark, out, lease_sec=2.0).acquire()
+            storage.JobLock(spark, out, lease_sec=2.0).acquire()
     finally:
         held.release()
     assert not os.path.exists(os.path.join(out, "job.lock"))
@@ -436,13 +437,13 @@ def test_stale_break_loser_restores_live_lock(spark, tmp_path):
     os.utime(lock_path, (old, old))
 
     # breaker A observes the stale lock, breaks it, acquires
-    a = pl._JobLock(spark, out, lease_sec=60.0).acquire()
+    a = storage.JobLock(spark, out, lease_sec=60.0).acquire()
     try:
         # breaker B observed the SAME stale token before A's break; by
         # the time B's rename runs, the path holds A's fresh lock
-        b = pl._JobLock(spark, out, lease_sec=60.0)
+        b = storage.JobLock(spark, out, lease_sec=60.0)
         b._token = "breaker-b"
-        fs, jpath, jvm = pl._hadoop_fs(spark, lock_path)
+        fs, jpath, jvm = storage.hadoop_fs(spark, lock_path)
         with pytest.raises(RuntimeError, match="break race"):
             b._break_stale(fs, jpath, jvm, "crashed")
         # A's live lock was restored, not destroyed
@@ -460,7 +461,7 @@ def test_lock_theft_detected_by_heartbeat(spark, tmp_path):
 
     out = str(tmp_path / "locktheft")
     os.makedirs(out)
-    held = pl._JobLock(spark, out, lease_sec=1.0).acquire()
+    held = storage.JobLock(spark, out, lease_sec=1.0).acquire()
     try:
         with open(os.path.join(out, "job.lock"), "w") as fh:
             fh.write(json.dumps({"token": "thief", "ts": _t.time()}))
@@ -488,8 +489,8 @@ def test_lock_heartbeat_survives_transient_fs_errors(spark, tmp_path,
 
     out = str(tmp_path / "lockbeat")
     os.makedirs(out)
-    held = pl._JobLock(spark, out, lease_sec=1.0).acquire()
-    real = pl._hadoop_fs
+    held = storage.JobLock(spark, out, lease_sec=1.0).acquire()
+    real = storage.hadoop_fs
     fail = {"left": 2}
 
     def flaky(spark_, path):
@@ -498,7 +499,7 @@ def test_lock_heartbeat_survives_transient_fs_errors(spark, tmp_path,
             raise IOError("injected transient FS error")
         return real(spark_, path)
 
-    monkeypatch.setattr(pl, "_hadoop_fs", flaky)
+    monkeypatch.setattr(storage, "hadoop_fs", flaky)
     try:
         lock_path = os.path.join(out, "job.lock")
         m0 = os.path.getmtime(lock_path)
@@ -510,7 +511,7 @@ def test_lock_heartbeat_survives_transient_fs_errors(spark, tmp_path,
         assert held.lost_reason is None
         held.check()
     finally:
-        monkeypatch.setattr(pl, "_hadoop_fs", real)
+        monkeypatch.setattr(storage, "hadoop_fs", real)
         held.release()
     assert not os.path.exists(os.path.join(out, "job.lock"))
 
@@ -605,7 +606,7 @@ def test_compact_crash_before_gc_rolls_forward(spark, seq, seq_path,
 
 def test_append_after_compact_no_id_collision(spark, seq, tmp_path):
     """Compacted group ids and append bucket ids share one allocator
-    (`_max_allocated_id`): an append after compaction gets fresh ids,
+    (`pipeline._max_allocated_id`): an append after compaction gets fresh ids,
     resume semantics hold, and the union decodes exactly."""
     src = str(tmp_path / "src_ac")
     out = str(tmp_path / "out_ac")
@@ -651,7 +652,7 @@ def test_compact_respects_target_and_singles(spark, seq, seq_path,
     # partial merge: a target one byte short of everything merges the
     # first two groups and leaves the third alone
     total = sum(sum(int(r["output_bytes"]) for r in rows)
-                for rows in pl._valid_group_manifests(spark, out)
+                for rows in storage.read_groups(spark, out)
                 .values())
     s2 = pl.compact_encoded_job(
         spark, out, target_group_output_bytes=total - 1)
@@ -665,7 +666,7 @@ def test_compact_holds_job_lock(spark, seq, seq_path, tmp_path):
     out = str(tmp_path / "comp5")
     pl.run_encode_job_files(spark, seq_path, out, n_buckets=4,
                             chunk_size=512, buckets_per_commit=2)
-    held = pl._JobLock(spark, out, lease_sec=30.0).acquire()
+    held = storage.JobLock(spark, out, lease_sec=30.0).acquire()
     try:
         with pytest.raises(RuntimeError, match="another writer holds"):
             pl.compact_encoded_job(spark, out)
@@ -747,6 +748,48 @@ def test_gc_retention_survives_intervening_writer(spark, seq, seq_path,
     assert len(os.listdir(os.path.join(out, "data"))) == 1
     assert pl.read_encoded(spark, out).count() == n0
     assert pl.verify_job(spark, seq, out)["n_mismatch"] == 0
+
+
+def test_compact_chain_with_mixed_retentions(spark, seq, tmp_path):
+    """compact(retention) -> append -> compact(): the second compaction
+    supersedes the first one's group, which GC must keep while the
+    groups IT retains are on disk — collecting it first would make
+    those groups live again and double-count their rows. After the
+    first retention expires, a vacuum collects the chain bottom-up."""
+    src = str(tmp_path / "src_chain")
+    out = str(tmp_path / "out_chain")
+    part = F.pmod(F.xxhash64("doc_id"), F.lit(2))
+    seq.filter(part == 0).repartition(4) \
+        .write.mode("overwrite").parquet(src)
+    pl.run_encode_job_files(spark, src, out, n_buckets=4, chunk_size=512,
+                            buckets_per_commit=1)
+    s = pl.compact_encoded_job(spark, out,
+                               target_group_output_bytes=1 << 40,
+                               gc_min_age_sec=3600.0)
+    assert s["groups_after"] == 1  # group 4 retains groups 0-3
+    seq.filter(part == 1).repartition(2) \
+        .write.mode("append").parquet(src)
+    pl.run_encode_job_files(spark, src, out, n_buckets=2, chunk_size=512,
+                            append=True)
+    s2 = pl.compact_encoded_job(spark, out,
+                                target_group_output_bytes=1 << 40)
+    assert s2["groups_before"] == 2 and s2["groups_after"] == 1
+    res = pl.verify_job(spark, seq, out)
+    assert res["n_mismatch"] == 0
+    assert res["n_decoded"] == res["n_joined"] == N_ROWS
+    assert len(os.listdir(os.path.join(out, "data"))) == 6  # 0-4 + new
+    # expire the first retention: groups 0-3 go, then group 4
+    mfile = os.path.join(out, "manifest", "group-00004.json")
+    rows = [json.loads(ln) for ln in open(mfile).read().splitlines()]
+    for r in rows:
+        r["ts"] -= 7200.0
+    with open(mfile, "w") as fh:
+        fh.write("".join(json.dumps(r) + "\n" for r in rows))
+    assert pl.vacuum_encoded(spark, out) == 5
+    assert len(os.listdir(os.path.join(out, "data"))) == 1
+    res = pl.verify_job(spark, seq, out)
+    assert res["n_mismatch"] == 0
+    assert res["n_decoded"] == res["n_joined"] == N_ROWS
 
 
 # ---------------------------------------------------------------------------
