@@ -1,12 +1,16 @@
 #!/usr/bin/env python3
 """Round-9 optimization profiling harness (guide §1): isolates each bench
-query with noop sinks / sub-stage walls so the computation is timed, not
-the sink, and dumps per-stage metrics from the REST status API.
+query's sub-stages (scan only, operator into a noop sink, full write)
+and prints the median wall of each one's repetitions (3, or 1 for the
+slowest), then one JSON object of those medians. It reads no Spark
+metrics; for per-stage executor, shuffle and spill metrics per layer,
+run
+`python3 perfbench/run.py --workload <name> --seed N --seconds 10 --trace 1`.
 
 This file is NOT part of the frozen measurement protocol (bench.py is);
 numbers here feed OPTIMIZATION_r09.md only.
 
-Usage: bench_extra.py <area> [reps]
+Usage: bench_extra.py [area]   (default: all)
 Areas: encode decode verify docs minhash stream_user stream_bucket
        pipeline ivf all
 """

@@ -1,10 +1,17 @@
-"""SparkSession factory with the engine's tuned defaults."""
+"""SparkSession factory with the engine's tuned defaults, and the
+process-wide hardening of the local environment the engine runs in."""
 
 from __future__ import annotations
 
+import logging
 import os
+import zipimport
+from typing import TYPE_CHECKING
 
-from pyspark.sql import SparkSession
+if TYPE_CHECKING:
+    from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
 
 
 def get_spark(app: str = "parquet_playground_rs_spark", cores: int | None = None,
@@ -16,6 +23,8 @@ def get_spark(app: str = "parquet_playground_rs_spark", cores: int | None = None
     exchange on (the encode/decode operators are mapInArrow), shuffle
     partitions sized to cores rather than the 200 default.
     """
+    from pyspark.sql import SparkSession
+
     cores_env = os.environ.get("SPARK_GRAFT_CPUS")
     if cores is None and cores_env:
         cores = int(cores_env)
@@ -64,14 +73,8 @@ def get_spark(app: str = "parquet_playground_rs_spark", cores: int | None = None
     # cluster (HDFS/object stores) the checkpoint manager should stay
     # Spark's default, so each is env-overridable and applied only for
     # local masters.
-    if master.startswith("local"):
-        ckpt_mgr = os.environ.get(
-            "SPARK_GRAFT_CHECKPOINT_MANAGER",
-            "org.apache.spark.sql.execution.streaming.checkpointing."
-            "FileSystemBasedCheckpointFileManager")
-        if ckpt_mgr:
-            b = b.config("spark.sql.streaming.checkpointFileManagerClass",
-                         ckpt_mgr)
+    local = master.startswith("local")
+    if local:
         # Spark 4.1 additionally writes a shadow ".checksum" file per
         # checkpoint file (corruption detection for remote stores);
         # on a local FS that doubles the exec-prone create/rename ops
@@ -80,4 +83,87 @@ def get_spark(app: str = "parquet_playground_rs_spark", cores: int | None = None
                      os.environ.get("SPARK_GRAFT_CKPT_CHECKSUM", "false"))
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    if local:
+        pin_checkpoint_manager(spark, os.environ.get(
+            "SPARK_GRAFT_CHECKPOINT_MANAGER",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager"))
     return spark
+
+
+def pin_checkpoint_manager(spark: SparkSession, class_name: str) -> bool:
+    """Set `class_name` as the streaming checkpoint file manager if the
+    driver JVM can load it; return whether it was set.
+
+    The default is a Spark-internal class that has already moved package
+    once (between 4.0 and 4.1). Pinning a name that no longer loads would
+    fail every streaming query at start, so a name that does not load
+    leaves Spark's default manager in place and logs a WARNING. An empty
+    name pins nothing.
+    """
+    if not class_name:
+        return False
+    from py4j.protocol import Py4JJavaError
+
+    jvm = spark.sparkContext._jvm
+    try:
+        jvm.java.lang.Class.forName(
+            class_name, False,
+            jvm.org.apache.spark.util.Utils.getContextOrSparkClassLoader())
+    except Py4JJavaError as e:
+        log.warning("checkpoint file manager %s does not load (%s); keeping "
+                    "Spark's default manager", class_name,
+                    e.java_exception.toString())
+        return False
+    spark.conf.set("spark.sql.streaming.checkpointFileManagerClass", class_name)
+    return True
+
+
+# Python-worker hardening. PySpark's worker calls
+# `importlib.invalidate_caches()` at the start of EVERY task (after adding
+# the task's py-files to sys.path). On CPython 3.11 that reaches
+# `zipimporter.invalidate_caches`, which re-parses the whole archive
+# directory in pure Python, once per importer: a worker holds 14-16
+# importers over $SPARK_HOME/python/lib/pyspark.zip (1,328 entries) plus
+# the py4j zip, so every task -- also on a reused, warm worker -- stalled
+# 150-350 ms before its UDF ran. No Spark conf avoids it:
+# PythonWorkerFactory always puts pyspark.zip first on the worker's
+# PYTHONPATH. The replacement below re-reads an archive only when its
+# (st_mtime_ns, st_size) differs from the last read, so a rewritten
+# archive is still re-read and import semantics are unchanged.
+_zip_stamps: dict[str, tuple[int, int] | None] = {}
+_zip_reread = zipimport.zipimporter.invalidate_caches
+
+
+def _invalidate_changed_zip(self: zipimport.zipimporter) -> None:
+    """`zipimporter.invalidate_caches` that re-reads the archive's
+    directory only when the archive changed since the last read."""
+    try:
+        st = os.stat(self.archive)
+        stamp = (st.st_mtime_ns, st.st_size)
+    except OSError:
+        stamp = None
+    files = zipimport._zip_directory_cache.get(self.archive)
+    if stamp is None or files is None or _zip_stamps.get(self.archive) != stamp:
+        # stat before read: a rewrite racing the read leaves an older
+        # stamp, so the next call reads again
+        _zip_stamps[self.archive] = stamp
+        _zip_reread(self)
+    else:
+        self._files = files
+
+
+def gate_zip_invalidation() -> None:
+    """Install `_invalidate_changed_zip` once per Python process.
+
+    Archives already cached are read once here, so each has a stamp that
+    is no newer than its cached directory.
+    """
+    if zipimport.zipimporter.invalidate_caches is _invalidate_changed_zip:
+        return
+    for archive in list(zipimport._zip_directory_cache):
+        try:
+            _invalidate_changed_zip(zipimport.zipimporter(archive))
+        except zipimport.ZipImportError:
+            zipimport._zip_directory_cache.pop(archive, None)
+    zipimport.zipimporter.invalidate_caches = _invalidate_changed_zip
